@@ -14,10 +14,9 @@ object Bench {
       // (45% of queries >1.2x, q_dsir_weights 17x): AQE's coalescing
       // does not recover the wide-exchange overhead for range-
       // partitioned/persisted stages. The one stage that NEEDS width
-      // now sizes itself from its own input stats (r17:
-      // NearDup.fixpointWidth scopes the widening inside the
-      // components operator), so the session default keeps the width
-      // the bench history was measured under.
+      // now sizes itself from its own input stats (graft.Width scopes
+      // the widening inside the components operator), so the session
+      // default keeps the width the bench history was measured under.
       .config("spark.ui.enabled", "false")
       // same pin as Verify: NTZ→timestamp casts are session-TZ-dependent,
       // so an unpinned bench on a non-UTC host would measure a different

@@ -139,31 +139,6 @@ object CacheRegistry {
       }
     }
 
-  /** Run `body` with AQE allowed to (re)plan cached subtrees
-    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`) — the
-    * r18 narrow-cache scope. Spark defaults the flag off because a
-    * consumer relying on a cached plan's exact output partitioning may
-    * re-shuffle; with it off, however, every persist() materializes at
-    * the un-coalesced session width, and an operator whose caches are
-    * KB-sized pays a session-width task floor on every consumer scan and
-    * broadcast build. Operators whose caches are provably small and
-    * whose downstream work is overhead- (not compute-) dense opt in HERE
-    * around the region that materializes them; the flag is restored on
-    * exit so compute-dense caches elsewhere (the skew spreads, the
-    * rerank scorers — measured 2-3x WORSE when coalesced) keep their
-    * width. Scale-adaptive by construction: AQE coalesces toward
-    * advisoryPartitionSizeInBytes, so the same cache keeps its width
-    * once the data grows past it.
-    */
-  def withNarrowCachedPlans[T](spark: org.apache.spark.sql.SparkSession)
-                              (body: => T): T = {
-    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try body
-    finally spark.conf.set(key, prev)
-  }
-
   /** Register a per-process localCheckpoint memo (the pretrainPacked /
     * retrievalTiers device: a ConcurrentHashMap whose keys lead with
     * `${sessionToken(session)}|`). Two lifetimes are managed:

@@ -59,7 +59,7 @@ import Similarity.quant6
   * (documented domain: token sets ≤ ~100 tokens, θ in (0.6, 1.0]).
   *
   * Edges at score ≥ θ feed [[NearDup.componentsFromEdges]] (the shared
-  * min-label-propagation fixpoint, run at [[NearDup.fixpointWidth]]'s
+  * min-label-propagation fixpoint, run at [[graft.Width]]'s
   * catalog-derived shuffle width); singleton signatures coalesce to
   * their own id after a left join — never pushed through the fixpoint.
   * Entity id = min record key of the component (signature ids are
@@ -148,37 +148,22 @@ object EntityResolution {
     // RIGHT-SIZED signature-stage width (r18): every stage of the
     // resolution between the signature frame and the per-signature map
     // is SIGNATURE-BOUNDED (the table saturates by the attribute-
-    // combination space at any corpus scale — EXPLAINS r17), yet it all
-    // ran at the session width — at 32 cores that is ~60 exchanges/
-    // persists of KB-sized frames spread 32 wide, and the driver
-    // measured q_entity_resolve 2.2x FASTER on 8 cores (6.0 s vs
-    // 13.1 s, PERF_r17 scaling 0.46). The width now follows the
-    // catalog's own stats (guide §2: partition count sized to data, not
-    // cores), CAPPED at the session width so corpus growth rides the
-    // session/deployment sizing; the whole signature-level chain is
-    // materialized HERE (eager checkpoint, signature-bounded rows)
-    // while the narrowed conf is in effect, so the caller's record-
-    // level expansion join still runs at full session width.
-    // SPARK_GRAFT_ER_SIG_PARTS overrides for probing.
-    val spark = sigIn.sparkSession
-    val session = spark.sessionState.conf.numShufflePartitions
-    val w = sys.env.get("SPARK_GRAFT_ER_SIG_PARTS").map(_.trim.toInt)
-      .getOrElse(math.min(session, NearDup.statsWidth(widthFrom, 262144)))
-    System.err.println(s"[er] resolveSigs width=$w (session=$session)")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    // combination space at any corpus scale — EXPLAINS r17), so it runs
+    // at Width's session-capped rule over the catalog's own stats; the
+    // whole signature-level chain is materialized HERE (eager
+    // checkpoint, signature-bounded rows) while the narrowed conf is in
+    // effect, so the caller's record-level expansion join still runs at
+    // full session width. The sig/prefArr caches inside the plan are
+    // signature-bounded and re-read by every candidate branch + the
+    // fixpoint, so the same scope lets AQE coalesce their cached plans
+    // too (r18, measured with subset A/B: q_entity_canonical 8.4 → 5.3 s
+    // at sf0.1).
     val snap = graft.CacheRegistry.snapshot()
-    spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-    // The sig/prefArr caches inside the plan are signature-bounded and
-    // re-read by every candidate branch + the fixpoint — let AQE
-    // coalesce their cached plans too (r18; the eager checkpoint below
-    // materializes them inside this scope, so the flag covers exactly
-    // this call's caches). Measured with subset A/B: q_entity_canonical
-    // 8.4 → 5.3 s at sf0.1.
-    val out =
-      try graft.CacheRegistry.withNarrowCachedPlans(spark) {
-        resolveSigsPlan(sigIn, threshold, widthFrom).localCheckpoint(true)
-      }
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val out = graft.Width.scoped(sigIn.sparkSession,
+        graft.Width.shuffle(graft.Width.capped("er.sig", widthFrom)),
+        graft.Width.NarrowCachedPlans) {
+      resolveSigsPlan(sigIn, threshold, widthFrom).localCheckpoint(true)
+    }
     // the eager checkpoint above fully consumed this call's internal
     // persists (sig, prefArr) and the fixpoint's label checkpoint —
     // release them now instead of holding a generation per call (the
@@ -284,17 +269,14 @@ object EntityResolution {
       }
     // the fixpoint's shuffle width scales with the INPUT's stats, not
     // the session (same device as NearDup.duplicateComponentsUnordered:
-    // every loop job launches while the conf is set, and the labels
-    // frame is localCheckpoint-materialized by loop exit, so downstream
+    // every loop job launches inside the scope, and the labels frame is
+    // localCheckpoint-materialized by loop exit, so downstream
     // consumers shuffle at the restored session width)
-    val spark = sig.sparkSession
-    val width = NearDup.fixpointWidth(widthFrom)
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    val comps =
-      try NearDup.componentsFromEdges(edges)
+    val comps = graft.Width.scoped(sig.sparkSession,
+        graft.Width.shuffle(graft.Width.of("er.fixpoint", widthFrom))) {
+      NearDup.componentsFromEdges(edges)
         .select(col("id").as("sig_id"), col("lbl"))
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
+    }
     val blockKey = concat(element_at(col("pref"), 1).getField("t"), lit("|"),
       coalesce(element_at(col("pref"), 2).getField("t"), lit("")))
     sig

@@ -198,111 +198,19 @@ object NearDup {
     * Output is the true fixpoint, so it is deterministic and oracled
     * against a DuckDB recursive CTE computing the same reachability.
     */
-  /** Shuffle width for the components stage, computed from the INPUT
-    * corpus's own size instead of inherited from the session conf — the
-    * round-16 CurateProbe finding made operator-adaptive: at the sf10
-    * decade the fixpoint's tokenize/band/label shuffles pushed 803 GiB
-    * through the task memory manager at the session's core-count width
-    * (~25 GiB sorted per task → 798 s walls dominated by spill), while
-    * 256 partitions cut spill 224× and wall to 214 s; the same width
-    * applied globally regressed the sf0.1 suite 62%, so the widening
-    * must live INSIDE the operator that needs it.
-    *
-    * Rule: one shuffle partition per ~256 KB of IN-MEMORY input corpus
-    * bytes, clamped to [1, 4096] (r18: the session floor is gone — see
-    * the note in the method body). When the
-    * input is a materialized cache its stats ARE in-memory bytes; a
-    * file-backed plan's stats understate the in-memory corpus ~2.4×
-    * (the fileCompressionFactor class of error — measured r17 at sf10:
-    * 59.6 MB estimated through the semi-join plan vs 142 MB
-    * materialized), so those get a 2× correction. The 256 KB figure
-    * prices the stage's ~1000× internal amplification (decompress +
-    * token/shingle explode + banded self-join) against the per-task
-    * sort budget. Measured at the sf10 decade (48g driver, the r16
-    * regime): fixed core-count width = 798 s comps / 803 GiB spill;
-    * width 228 still spilled 447 GiB; width 455 (this rule,
-    * file-backed path) ran the FULL curate query in 256.6 s with ZERO
-    * spill; width 544 (this rule, cached path) ran comps in 197.3 s
-    * with ZERO spill; width 1088 was spill-free but 1.5× slower than
-    * 544 on task overhead + GC — the rule sits both paths in the
-    * measured sweet band. sf0.1's 0.6 MB corpus prices to a handful of
-    * partitions (r18 — measured better than the old session-width
-    * floor at 32 cores); growth beyond the cap rides AQE/deployment
-    * sizing.
-    * Width never changes values — the fixpoint is a deterministic
-    * min-label propagation — so the oracle gate is width-blind.
-    * SPARK_GRAFT_FIXPOINT_PARTS overrides for probing (CurateProbe
-    * prices candidate widths through it).
-    */
-  private[graft] def fixpointWidth(input: DataFrame): Int =
-    sys.env.get("SPARK_GRAFT_FIXPOINT_PARTS").map(_.trim.toInt).getOrElse {
-      // r18: the session FLOOR is gone — width now follows the input
-      // stats alone. The floor was kept in r17 on a "measured optimal at
-      // sf0.1" reading that the driver's own scaling block contradicted
-      // (q_split_leakage 1.7x FASTER at 8 cores than 32, q_cluster_best
-      // flat): at 32 cores the floor spread KB-sized label frames 32
-      // wide and multiplied per-task overhead. Re-measured r18 at
-      // sf0.1/local[32], 3-rep medians: width 6 (≈ the stats rule) vs
-      // the session-32 floor — q_split_leakage 5.54 → 4.31 s,
-      // q_pipeline_curate 6.59 → 6.29, q_cluster_best/q_neardup_
-      // components flat. The spill-protective growth is unchanged: the
-      // stats rule widens past any session width as soon as the corpus
-      // does (the measured sf10 sweet band, see statsWidth).
-      statsWidth(input, 262144)
-    }
-
-  /** Stats-estimated in-memory bytes of a plan's input — the shared
-    * measurement under [[fixpointWidth]] and the r18 right-sizing
-    * devices (EntityResolution's signature-stage width, the
-    * stream-stream join state width): a MATERIALIZED cache reports
-    * actual in-memory bytes; a merely persist()-marked (buffers not
-    * yet loaded) or file-backed plan reports the file-side estimate,
-    * which gets the 2x fileCompressionFactor-class correction
-    * (measured r17 at sf10: 59.6 MB estimated vs 142 MB materialized).
-    */
-  private[graft] def statsBytes(input: DataFrame): BigInt = {
-    val plan = input.queryExecution.optimizedPlan
-    val loaded = plan.exists {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cacheBuilder.isCachedColumnBuffersLoaded
-      case _ => false
-    }
-    val est = plan.stats.sizeInBytes
-    if (loaded) est else est * 2
-  }
-
-  /** Shuffle partitions priced from input stats alone: one partition
-    * per `bytesPerPart` of estimated in-memory input, clamped to
-    * [1, 4096]. Callers compose their own floor/cap semantics —
-    * [[fixpointWidth]] floors at the session width (its stages need
-    * width for spill at scale), while the r18 right-sizing callers CAP
-    * at the session width (their stages are bounded-size and the core
-    * count only multiplies per-task overhead on KB frames).
-    */
-  private[graft] def statsWidth(input: DataFrame, bytesPerPart: Long): Int = {
-    val bytes = statsBytes(input)
-    ((bytes + (bytesPerPart - 1)) / bytesPerPart)
-      .min(BigInt(4096)).max(BigInt(1)).toInt
-  }
-
   def duplicateComponentsUnordered(documents: DataFrame,
-                                   maxHamming: Int = 3): DataFrame = {
-    val spark = documents.sparkSession
+                                   maxHamming: Int = 3): DataFrame =
     // widen the whole components stage (fingerprints + banded self-join +
-    // label-propagation rounds): every job in this method launches while
-    // the conf is set, and the returned frame is already materialized
+    // label-propagation rounds) to the corpus's own size (Width's
+    // uncapped rule — the stage's ~1000x internal amplification spills
+    // at the core-count width at sf10): every job in this method launches
+    // inside the scope, and the returned frame is already materialized
     // (localCheckpoint) by loop exit, so downstream consumers shuffle at
     // the restored session width
-    val width = fixpointWidth(documents)
-    // announced on stderr (the benchForms precedent) so probes and bench
-    // logs record which width a run actually used
-    System.err.println(s"[neardup] components fixpoint width=$width " +
-      s"(input stats bytes=${documents.queryExecution.optimizedPlan.stats.sizeInBytes})")
-    val prevWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-    try duplicateComponentsAtWidth(documents, maxHamming)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevWidth)
-  }
+    graft.Width.scoped(documents.sparkSession, graft.Width.shuffle(
+        graft.Width.of("neardup.fixpoint", documents))) {
+      duplicateComponentsAtWidth(documents, maxHamming)
+    }
 
   private def duplicateComponentsAtWidth(documents: DataFrame,
                                          maxHamming: Int): DataFrame =

@@ -273,24 +273,16 @@ object Similarity {
     * original.
     */
   private def pointsOf(embeddings: DataFrame): DataFrame = {
-    // RIGHT-SIZED width (r18, guide §2.2 partitions sized to data): the
-    // points frame's partition count is what EVERY downstream stage of a
-    // build chain inherits (each Lloyd assignment, the cell/code
-    // encodes, the PQ base all scan these cached partitions), and the
-    // unpinned repartition spread it session-wide — at local[32] that is
-    // a 32-task map side for every one of the chain's ~15 stages over a
-    // sub-MB frame, pure per-task floor (the driver's r17 scaling block
-    // reads q_ivfpq_retrain/append/tune at 0.98-0.99: 8 cores as fast as
-    // 32). Width now follows the input's own stats (one partition per
-    // 256 KB, the ER-signature pricing), CAPPED at the session width so
-    // a corpus-sized build still rides the session/deployment sizing —
-    // statsWidth grows past any core count as soon as the data does.
-    // SPARK_GRAFT_POINTS_PARTS overrides for probing.
-    val session = embeddings.sparkSession.sessionState.conf.numShufflePartitions
-    val w = sys.env.get("SPARK_GRAFT_POINTS_PARTS").map(_.trim.toInt)
-      .getOrElse(math.min(session, NearDup.statsWidth(embeddings, 262144)))
-    System.err.println(s"[points] width=$w (session=$session, " +
-      s"stats=${NearDup.statsBytes(embeddings)})")
+    // RIGHT-SIZED width (r18): the points frame's partition count is
+    // what EVERY downstream stage of a build chain inherits (each Lloyd
+    // assignment, the cell/code encodes, the PQ base all scan these
+    // cached partitions), and the unpinned repartition spread it
+    // session-wide — at local[32] a 32-task map side for every one of
+    // the chain's ~15 stages over a sub-MB frame, pure per-task floor
+    // (r17 scaling: q_ivfpq_retrain/append/tune 8 cores as fast as 32).
+    // Width's session-capped rule sizes it from the input's own stats,
+    // so a corpus-sized build still rides the session/deployment sizing.
+    val w = graft.Width.capped("points", embeddings)
     val pts = embeddings.repartition(w, col("vec_id"))
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
     // LAZY localCheckpoint, not persist: the columnar cache encodes /
@@ -1561,7 +1553,8 @@ object Similarity {
     // codebook-sized frames re-read by every assignment/encode stage —
     // at the un-coalesced session width each re-read was a
     // session-width task wave over KBs.
-    graft.CacheRegistry.withNarrowCachedPlans(embeddings.sparkSession) {
+    graft.Width.scoped(embeddings.sparkSession,
+        graft.Width.NarrowCachedPlans) {
       buildIvfPqIndexBody(embeddings, dir, trainIters)
     }
 
@@ -1822,7 +1815,8 @@ object Similarity {
     // eager like the build — both artifact writes land inside, so the
     // scope covers exactly this append's caches (the saved-codebook
     // re-reads)
-    graft.CacheRegistry.withNarrowCachedPlans(newVectors.sparkSession) {
+    graft.Width.scoped(newVectors.sparkSession,
+        graft.Width.NarrowCachedPlans) {
       appendToIvfPqIndexBody(newVectors, dir, gen)
     }
 
@@ -2546,7 +2540,8 @@ object Similarity {
     // localCheckpoint materializes everything inside this scope, so the
     // narrow-cache flag covers exactly these caches; values are
     // partitioning-blind (argmax via min-struct, checked by the oracle).
-    graft.CacheRegistry.withNarrowCachedPlans(documents.sparkSession) {
+    graft.Width.scoped(documents.sparkSession,
+        graft.Width.NarrowCachedPlans) {
       mmrTopKBody(documents, nQueries, k, m, lam, penal, size, stride,
         dims, nLabels)
     }

@@ -348,6 +348,9 @@ private[sources] object ShardsConf {
       errorsTimes = options.getInt("graft.errors.times", 0),
       maxRetries = options.getInt("graft.errors.maxRetries", 3),
       retryDelayMs = options.getLong("graft.errors.retryDelayMs", 5L))
+    require(conf.maxFetchPerShard > 0,
+      s"kinesis.maxFetchRecordsPerShard=${conf.maxFetchPerShard} — " +
+        "must be positive")
     require(Set("TRIM_HORIZON", "LATEST").contains(conf.startingPosition),
       s"kinesis.startingPosition=${conf.startingPosition} — " +
         "expected TRIM_HORIZON or LATEST")

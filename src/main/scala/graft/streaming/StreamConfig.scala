@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.DataStreamReader
   * |---|---|---|
   * | BUCKET_NAME   | S3 landing bucket (consumer.py:254)   | landing root dir/URI |
   * | PREFIX        | S3 key prefix 'js/' (consumer.py:257) | subdir under the root |
-  * | BATCH_SIZE    | GetRecords limit 1000 (consumer.py:255) | per-trigger input cap |
+  * | BATCH_SIZE    | GetRecords limit 1000 (consumer.py:255) | per-shard records per trigger |
   * | SHARD_NUMBER  | which shard this worker owns (consumer.py:260) | shard_id filter |
   *
   * The DynamoDB lease table name needs no analog — checkpointing is the
@@ -27,6 +27,8 @@ case class StreamConfig(
     batchSize: Int = 1000,
     shardNumber: Option[Int] = None,
     nShards: Int = 8) {
+  require(batchSize > 0, s"BATCH_SIZE=$batchSize — must be positive")
+  require(nShards > 0, s"nShards=$nShards — must be positive")
   shardNumber.foreach(s => require(s >= 0 && s < nShards,
     s"SHARD_NUMBER=$s outside [0, $nShards) — the stream has $nShards shards"))
   /** Parity-mode workers each own a shard-scoped output and checkpoint —
@@ -80,8 +82,8 @@ object StreamConfig {
 
   /** A ready-to-`.load()` reader for the Kinesis source. Building the
     * reader performs no I/O (options are validated at load time), so the
-    * wiring itself is verifiable offline; swapping it for
-    * [[StreamOps.stageStreamDir]]'s file source is the only difference
+    * wiring itself is verifiable offline; swapping it for the
+    * [[graft.sources.GraftShards]] source is the only difference
     * between the offline pipelines and a live deployment.
     */
   def kinesisReader(spark: SparkSession, cfg: StreamConfig,
@@ -90,28 +92,21 @@ object StreamConfig {
       .options(kinesisSourceOptions(cfg, streamName, region))
 
   /** The configured landing pipeline: the reference's main() loop
-    * (consumer.py:282-314) under this engine. A SHARD_NUMBER pins the
-    * query to one shard's records (parity mode); omitting it consumes
-    * every shard in one query. `useDsv2Source = true` runs the SAME
-    * pipeline over the [[graft.sources.GraftShards]] MicroBatchStream,
-    * where BATCH_SIZE maps to the per-shard GetRecords Limit EXACTLY
-    * (consumer.py:118) instead of the file source's files-per-trigger
-    * approximation — the closest offline twin of the reference's loop.
+    * (consumer.py:282-314) under this engine, over the
+    * [[graft.sources.GraftShards]] MicroBatchStream — the closest
+    * offline twin of the reference's loop, where BATCH_SIZE is the
+    * exact per-shard GetRecords Limit (consumer.py:118). A SHARD_NUMBER
+    * pins the query to one shard's records (parity mode); omitting it
+    * consumes every shard in one query.
     */
   def landConfigured(spark: SparkSession, sfDir: String,
-                     cfg: StreamConfig,
-                     useDsv2Source: Boolean = false): Unit = {
-    // BATCH_SIZE caps per-trigger input at the SOURCE (a sink would
-    // silently ignore the option); the shard count must match the
-    // envelope's routing or a high SHARD_NUMBER would match nothing
-    val base =
-      if (useDsv2Source)
-        StreamOps.dedupEventsFrame(StreamOps.shardsEventStream(spark,
-          graft.sources.GraftShards.stageShardDir(sfDir = sfDir,
-            spark = spark, nShards = cfg.nShards),
-          batchSize = Some(cfg.batchSize)))
-      else StreamOps.dedupedEvents(spark, StreamOps.stageStreamDir(sfDir),
-        maxFilesPerTrigger = Some(cfg.batchSize), nShards = cfg.nShards)
+                     cfg: StreamConfig): Unit = {
+    // the shard count must match the envelope's routing or a high
+    // SHARD_NUMBER would match nothing
+    val base = StreamOps.dedupEventsFrame(StreamOps.shardsEventStream(spark,
+      graft.sources.GraftShards.stageShardDir(sfDir = sfDir,
+        spark = spark, nShards = cfg.nShards),
+      batchSize = Some(cfg.batchSize)))
     val routed = cfg.shardNumber match {
       case Some(s) => base.filter(col("shard_id") === s)
       case None => base

@@ -192,10 +192,9 @@ object StreamOps {
     * source.
     */
   def dedupedEvents(spark: SparkSession, streamDir: String,
-                    maxFilesPerTrigger: Option[Int] = None,
-                    nShards: Int = 8): DataFrame =
+                    maxFilesPerTrigger: Option[Int] = None): DataFrame =
     dedupEventsFrame(eventsStreamFromDir(spark, streamDir,
-      nShards = nShards, maxFilesPerTrigger = maxFilesPerTrigger))
+      maxFilesPerTrigger = maxFilesPerTrigger))
 
   /** One micro-batch of the landing sink: partitioned JSON under a
     * DETERMINISTIC per-batch directory, written with overwrite. Replaying
@@ -623,6 +622,23 @@ object StreamOps {
       .orderBy("window_start_s")
   }
 
+  /** State-store width for the stream-stream joins (r18): a streaming
+    * query's stateful exchanges are created at
+    * `spark.sql.shuffle.partitions`, and EVERY micro-batch pays a
+    * per-partition state-store open/commit — at the session width of 32
+    * over the KB-sized replay that floor dominated the query (r17:
+    * ssjoin_outer 10.0 s at 32 cores vs 5.1 s at 8). Width's 8 MiB
+    * state rule, priced from the replayed input's own stats and NOT
+    * capped at the session width (state partitions can usefully exceed
+    * cores at scale), scoped around the drain. Join results are
+    * partitioning-blind; the drained output is re-sorted.
+    */
+  private def atStateWidth[T](spark: SparkSession, sfDir: String)
+                             (body: => T): T =
+    graft.Width.scoped(spark, graft.Width.shuffle(graft.Width.of(
+        "ssjoin.state", graft.Tables.events(spark, sfDir),
+        graft.Width.StateBytes)))(body)
+
   /** STREAM-STREAM interval join (the last big Structured Streaming
     * operator class next to windowed aggs and custom state): purchases
     * joined to the same user's views from the preceding hour, both sides
@@ -633,35 +649,6 @@ object StreamOps {
     * range condition the state store would have to keep both streams
     * forever. Append mode: each matched pair is emitted exactly once.
     */
-  /** State-store partition count for the stream-stream joins, priced
-    * from the replayed input's own stats (r18): a streaming query's
-    * stateful exchanges are created at `spark.sql.shuffle.partitions`,
-    * and EVERY micro-batch pays a per-partition state-store
-    * open/commit — at the session width of 32 over the KB-sized replay
-    * that floor dominated the query (driver r17: ssjoin_outer 10.0 s at
-    * 32 cores vs 5.1 s at 8, scaling 0.51 — half the wall was width
-    * overhead, not state). One partition per 8 MB of estimated input
-    * bounds per-partition buffered state well under the guide's
-    * 100 MB–1 GB partition band while keeping tiny replays narrow;
-    * clamped to [1, 4096] and NOT capped at the session width (state
-    * partitions can usefully exceed cores at scale). Join results are
-    * partitioning-blind; the drained output is re-sorted. Scoped to the
-    * interval-join queries via a conf set/restore around the drain.
-    * SPARK_GRAFT_STREAM_STATE_PARTS overrides for probing.
-    */
-  private def ssjStateWidth(spark: SparkSession, input: DataFrame): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").map(_.trim.toInt)
-      .getOrElse(
-        graft.operators.NearDup.statsWidth(input, 8L << 20))
-
-  private def withStateWidth[T](spark: SparkSession, w: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    System.err.println(s"[ssjoin] state width=$w (session=$prev)")
-    spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val table = s"graft_stream_ssj_${UUID.randomUUID().toString.take(8)}"
     val purchases = eventsStream(spark, sfDir)
@@ -674,8 +661,7 @@ object StreamOps {
       .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
               col("ts").as("v_ts"))
       .withWatermark("v_ts", "2 hours")
-    withStateWidth(spark,
-        ssjStateWidth(spark, graft.Tables.events(spark, sfDir))) {
+    atStateWidth(spark, sfDir) {
       val q = purchases.join(views,
           expr("p_user = v_user AND v_ts >= p_ts - interval 1 hour AND v_ts <= p_ts"))
         .writeStream
@@ -788,8 +774,7 @@ object StreamOps {
       .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
               col("ts").as("v_ts"))
       .withWatermark("v_ts", "2 hours")
-    withStateWidth(spark,
-        ssjStateWidth(spark, graft.Tables.events(spark, sfDir))) {
+    atStateWidth(spark, sfDir) {
       val q = purchases.join(views,
           expr("p_user = v_user AND v_ts >= p_ts - interval 1 hour AND v_ts <= p_ts"),
           joinType)
@@ -2383,18 +2368,14 @@ object StreamOps {
           // paid a session-width exchange per KB-sized micro-batch and
           // REGRESSED the measured case (driver: 9.50 → 11.49 s at
           // sf0.1) — the spread only pays when each post-spread task
-          // gets at least spreadMinBytesPerTask of pre-expand input.
-          // At scale a staged batch is GB-sized and the spread engages;
-          // values are identical either way (partitioning-blind aggs).
-          val width =
-            batch.sparkSession.sessionState.conf.numShufflePartitions
-          val minPerTask = batch.sparkSession.conf
-            .get("spark.graft.stream.spreadMinBytesPerTask", (4L << 20).toString)
-            .toLong
-          val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+          // gets enough pre-expand input (Width.spread). At scale a
+          // staged batch is GB-sized and the spread engages; values are
+          // identical either way (partitioning-blind aggs).
           val b =
-            if (bytes >= BigInt(width) * minPerTask)
-              batch.repartition(width, col("l_orderkey"))
+            if (graft.Width.spread("stream.profile", batch))
+              batch.repartition(
+                batch.sparkSession.sessionState.conf.numShufflePartitions,
+                col("l_orderkey"))
             else batch
           val m = Pipeline.profileMomentAggs
           b.agg(m.head, m.tail: _*)

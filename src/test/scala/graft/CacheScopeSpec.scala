@@ -1,34 +1,39 @@
 package graft
 
-/** The r18 narrow-cache scope: operators whose caches are list-sized
-  * opt in to AQE replanning of cached subtrees for exactly the region
-  * that materializes them. The scope must be leak-proof — a leaked
-  * `true` would let AQE coalesce a compute-dense cache elsewhere
-  * (measured 2-3x regressions on the skew/rerank paths when the flag
-  * was session-global), so restoration is load-bearing, not hygiene.
+/** The r18 narrow-cache scope, applied through [[Width.scoped]]:
+  * operators whose caches are list-sized opt in to AQE replanning of
+  * cached subtrees for exactly the region that materializes them. The
+  * scope must be leak-proof — a leaked `true` would let AQE coalesce a
+  * compute-dense cache elsewhere (measured 2-3x regressions on the
+  * skew/rerank paths when the flag was session-global), and a leaked
+  * shuffle width would resize every later query — so restoration is
+  * load-bearing, not hygiene.
   */
 class CacheScopeSpec extends SparkSpec {
 
   private val key =
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+  private val width = "spark.sql.shuffle.partitions"
 
-  test("withNarrowCachedPlans sets the flag inside and restores it after") {
+  test("Width.scoped sets the narrow-cache flag inside and restores it after") {
     val before = spark.conf.get(key)
-    val seen = CacheRegistry.withNarrowCachedPlans(spark) {
+    val seen = Width.scoped(spark, Width.NarrowCachedPlans) {
       spark.conf.get(key)
     }
     assert(seen == "true")
     assert(spark.conf.get(key) == before)
   }
 
-  test("withNarrowCachedPlans restores the flag when the body throws") {
-    val before = spark.conf.get(key)
+  test("Width.scoped restores every key when the body throws") {
+    val before = (spark.conf.get(key), spark.conf.get(width))
     intercept[RuntimeException] {
-      CacheRegistry.withNarrowCachedPlans(spark) {
+      Width.scoped(spark, Width.NarrowCachedPlans, Width.shuffle(17)) {
+        assert(spark.conf.get(key) == "true")
+        assert(spark.conf.get(width) == "17")
         throw new RuntimeException("boom")
       }
     }
-    assert(spark.conf.get(key) == before)
+    assert((spark.conf.get(key), spark.conf.get(width)) == before)
   }
 
   test("narrow-cache scope does not perturb a cached aggregation's values") {
@@ -41,7 +46,7 @@ class CacheScopeSpec extends SparkSpec {
       finally { c.unpersist(blocking = true); () }
     }
     val plain = census()
-    val narrow = CacheRegistry.withNarrowCachedPlans(spark) { census() }
+    val narrow = Width.scoped(spark, Width.NarrowCachedPlans) { census() }
     assert(plain == narrow)
   }
 }

@@ -37,23 +37,41 @@ class DedupSpec extends SparkSpec {
     assert(sketch === exact)
   }
 
-  test("fixpointWidth: stats-proportional width, narrow on tiny inputs, " +
-       "4096 cap") {
+  test("Width rules over range stats: uncapped, capped, 8 MiB state, " +
+       "spread boundary") {
     // r18: no session floor — a KB-sized input runs the fixpoint NARROW
-    // regardless of core count (the driver-measured anti-scaling fix);
-    // the sf0.001 documents table prices to a handful of partitions
-    val docs = Tables.documents(spark, sf0001)
-    val w = NearDup.fixpointWidth(docs)
-    assert(w >= 1 && w <= 4,
-      s"tiny corpus must stay narrow, got $w")
-    // an input whose Catalyst-estimated size crosses the 128 KB/partition
-    // rule widens proportionally: range stats are 8 bytes/row, so 2^20
-    // rows = 8 MiB -> ceil(8 MiB / 128 KiB) = 64 partitions
-    val mid = spark.range(1L << 20).toDF()
-    assert(NearDup.fixpointWidth(mid) === 64)
-    // and a third-decade-sized input hits the 4096 cap, never beyond
-    val big = spark.range(1L << 31).toDF()
-    assert(NearDup.fixpointWidth(big) === 4096)
+    // regardless of core count; the sf0.001 documents table prices to a
+    // handful of partitions
+    val w = Width.of("test", Tables.documents(spark, sf0001))
+    assert(w >= 1 && w <= 4, s"tiny corpus must stay narrow, got $w")
+    // range stats are 8 bytes/row and uncached, so statsBytes doubles
+    // them: 2^20 rows = 8 MiB → 16 MiB, and the fixpoint rule is
+    // ceil(16 MiB / 256 KiB) = 64 partitions
+    def rows(n: Long) = spark.range(n).toDF()
+    val session = spark.sessionState.conf.numShufflePartitions
+    assert(session === 4)
+    val table = Seq(
+      // (rule, rows, expected width)
+      ("uncapped", 1000L, 1),          // 16 KB → 1
+      ("uncapped", 1L << 20, 64),
+      ("uncapped", 1L << 31, 4096),    // clamped, never beyond
+      ("capped", 1000L, 1),
+      ("capped", 1L << 20, session),   // 64 capped at the session's 4
+      ("state", 1L << 20, 2),          // 16 MiB / 8 MiB
+      ("state", 1L << 22, 8),
+      ("state", 1000L, 1))
+    table.foreach { case (rule, n, want) =>
+      val got = rule match {
+        case "uncapped" => Width.of("test", rows(n))
+        case "capped" => Width.capped("test", rows(n))
+        case "state" => Width.of("test", rows(n), Width.StateBytes)
+      }
+      assert(got === want, s"$rule over $n rows")
+    }
+    // the spread engages once the RAW estimate reaches session × 4 MiB:
+    // 4 × 4 MiB = 16 MiB = 2^21 rows of 8 bytes
+    assert(Width.spread("test", rows(1L << 21)))
+    assert(!Width.spread("test", rows((1L << 21) - 1)))
   }
 
   test("duplicateComponents: fixpoint result is width-invariant (same " +

@@ -50,6 +50,14 @@ class GraftShardsSpec extends SparkSpec {
     assert(parsed.filter(
       col("sequenceNumber") =!= format_string("%020d", col("p.event_id")))
       .count() === 0L)
+    // a non-positive per-shard cap is rejected when the reader is built
+    Seq("0", "-5").foreach { cap =>
+      intercept[IllegalArgumentException] {
+        spark.read.format("graft-shards")
+          .option("kinesis.maxFetchRecordsPerShard", cap).load(shardDir)
+          .count()
+      }
+    }
   }
 
   test("BATCH_SIZE pages the drain: cap 100/shard → multiple batches, " +

@@ -22,9 +22,13 @@ class StreamConfigSpec extends SparkSpec {
     assert(cfg.checkpointDir === "/tmp/bucket/_checkpoint/shard=3")
     assert(cfg.batchSize === 500)
     assert(cfg.shardNumber === Some(3))
-    intercept[IllegalArgumentException] {
-      StreamConfig.fromEnv(Map("SHARD_NUMBER" -> "12")) // >= nShards(8)
-    }
+    // SHARD_NUMBER >= nShards(8); a BATCH_SIZE of 0 would land nothing
+    // and a negative one would move end offsets below start offsets
+    Seq("SHARD_NUMBER" -> "12", "BATCH_SIZE" -> "0", "BATCH_SIZE" -> "-5")
+      .foreach { kv =>
+        intercept[IllegalArgumentException](StreamConfig.fromEnv(Map(kv)))
+      }
+    intercept[IllegalArgumentException](StreamConfig("/tmp/x", nShards = 0))
   }
 
   test("Kinesis source wiring maps StreamConfig onto connector options (egress-gated)") {
@@ -117,7 +121,7 @@ class StreamConfigSpec extends SparkSpec {
     val cfg = StreamConfig.fromEnv(Map(
       "BUCKET_NAME" -> root.toString, "SHARD_NUMBER" -> "3",
       "BATCH_SIZE" -> "60"))
-    StreamConfig.landConfigured(spark, sf0001, cfg, useDsv2Source = true)
+    StreamConfig.landConfigured(spark, sf0001, cfg)
     val landed = spark.read
       .schema(StreamOps.landedDataSchema).json(cfg.outDir)
     assert(landed.count() > 0)
