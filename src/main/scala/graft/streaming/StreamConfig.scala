@@ -88,7 +88,7 @@ object StreamConfig {
     */
   def kinesisReader(spark: SparkSession, cfg: StreamConfig,
                     streamName: String, region: String): DataStreamReader =
-    spark.readStream.format("kinesis")
+    StreamOps.readStream(spark).format("kinesis")
       .options(kinesisSourceOptions(cfg, streamName, region))
 
   /** The configured landing pipeline: the reference's main() loop

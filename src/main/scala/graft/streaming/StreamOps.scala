@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.Landing
 
@@ -41,9 +41,14 @@ object StreamOps {
     * keeps working state off-heap with native spill — the production
     * configuration for large state. Selected per session via
     * env SPARK_GRAFT_STATESTORE (rocksdb | hdfs; unset = Spark default)
-    * or programmatically; applied by every stream builder in this object,
-    * so all q_stream_* queries run identically under either provider
-    * (asserted in StreamingSpec, measured in StreamScaleProbe).
+    * or programmatically; applied by every stream builder in this object
+    * through [[readStream]], so all q_stream_* queries run identically
+    * under either provider (asserted in StreamingSpec, measured in
+    * StreamScaleProbe).
+    *
+    * It also installs [[graft.io.LocalFs]] as `FileContext`'s `file:`
+    * filesystem, which every checkpoint manager built afterwards uses for
+    * the offset log, commit log and state-store files.
     */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -52,7 +57,8 @@ object StreamOps {
 
   def configureStateStore(spark: SparkSession,
                           provider: Option[String] =
-                            sys.env.get("SPARK_GRAFT_STATESTORE")): Unit =
+                            sys.env.get("SPARK_GRAFT_STATESTORE")): Unit = {
+    graft.io.LocalFs.install(spark.sparkContext.hadoopConfiguration)
     provider.map(_.toLowerCase).foreach {
       case "rocksdb" =>
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
@@ -61,6 +67,16 @@ object StreamOps {
       case other => throw new IllegalArgumentException(
         s"unknown state-store provider '$other' — expected rocksdb or hdfs")
     }
+  }
+
+  /** The reader every stream builder starts from: the session is
+    * configured ([[configureStateStore]]) before the query exists, so no
+    * builder depends on another having run first in the JVM.
+    */
+  def readStream(spark: SparkSession): DataStreamReader = {
+    configureStateStore(spark)
+    spark.readStream
+  }
 
   /** Flat events schema as stored: ts = parquet TIMESTAMP(µs,
     * isAdjustedToUTC=false) = Spark TIMESTAMP_NTZ; [[withEnvelope]]
@@ -151,12 +167,6 @@ object StreamOps {
   def eventsStream(spark: SparkSession, sfDir: String, nShards: Int = 8): DataFrame =
     eventsStreamFromDir(spark, stageStreamDir(sfDir), nShards)
 
-  /** Same, over an arbitrary staging directory (tests append files to it
-    * to simulate new stream arrivals / at-least-once redelivery).
-    * maxFilesPerTrigger is a SOURCE option (the reference's BATCH_SIZE
-    * fetch cap, consumer.py:255) — it bounds how much input each
-    * micro-batch drains.
-    */
   /** The envelope projection (S3): native-micros ts, sequence_number, and
     * shard routing — applied identically to the stream reader and to the
     * empty frame [[landedDataSchema]] derives from, so the landed schema
@@ -167,12 +177,17 @@ object StreamOps {
       .withColumn("sequence_number", col("event_id"))
       .withColumn("shard_id", pmod(col("user_id"), lit(nShards)))
 
+  /** [[eventsStream]] over an arbitrary staging directory (tests append
+    * files to it to simulate new stream arrivals / at-least-once
+    * redelivery). maxFilesPerTrigger is a SOURCE option (the reference's
+    * BATCH_SIZE fetch cap, consumer.py:255) — it bounds how much input
+    * each micro-batch drains.
+    */
   def eventsStreamFromDir(spark: SparkSession, streamDir: String,
                           nShards: Int = 8,
                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    configureStateStore(spark)
-    val reader = spark.readStream.schema(rawSchema)
+    val reader = readStream(spark).schema(rawSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     withEnvelope(reader.parquet(streamDir), nShards)
   }
@@ -273,8 +288,7 @@ object StreamOps {
                         batchSize: Option[Int] = None,
                         errorOpts: Map[String, String] = Map.empty)
       : DataFrame = {
-    configureStateStore(spark)
-    val reader = spark.readStream.format("graft-shards")
+    val reader = readStream(spark).format("graft-shards")
       .option("path", shardDir)
       .option("kinesis.startingPosition", "TRIM_HORIZON")
       .options(errorOpts)
@@ -429,7 +443,7 @@ object StreamOps {
       .withColumn("value", col("value") + lit(1000.0))
       .withColumn("corrected", lit(1))
     val root = stageRanges(corrections, "event_id", nBatches)
-    val q = spark.readStream.schema(corrections.schema)
+    val q = readStream(spark).schema(corrections.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -996,8 +1010,7 @@ object StreamOps {
   private def runStagedBatches(spark: SparkSession, schema: StructType,
                                srcDir: String, ckDir: String)(
                                f: (DataFrame, Long) => Unit): Unit = {
-    configureStateStore(spark)
-    val q = spark.readStream.schema(schema)
+    val q = readStream(spark).schema(schema)
       .option("maxFilesPerTrigger", 1) // one staged file per micro-batch
       .parquet(srcDir)
       .writeStream
@@ -1302,7 +1315,6 @@ object StreamOps {
     val goodDir = s"$tmp/graft_quarantine/$runId/good"
     val badDir = s"$tmp/graft_quarantine/$runId/bad"
     val ckDir = s"$tmp/graft_quarantine/$runId/ck"
-    configureStateStore(spark)
     val q = eventsStream(spark, sfDir)
       .withColumn("raw",
         when(pmod(col("event_id"), lit(7)) === 0,
@@ -1364,11 +1376,10 @@ object StreamOps {
     import graft.operators.Similarity
     val emb = graft.Tables.embeddings(spark, sfDir)
     val root = stageRanges(emb, "vec_id", nBatches)
-    configureStateStore(spark)
     val cb = Similarity.coarseCodebook(emb).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
     val table = s"graft_stream_ivf_${UUID.randomUUID().toString.take(8)}"
-    val q = spark.readStream.schema(emb.schema)
+    val q = readStream(spark).schema(emb.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .withColumn("assigned", Similarity.assignByLiteralCodebook(
@@ -1406,14 +1417,13 @@ object StreamOps {
                        dims: Int = 8, nLabels: Int = 8): DataFrame = {
     import graft.operators.Similarity
     val root = stageDocRanges(spark, sfDir, nBatches)
-    configureStateStore(spark)
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
     val cb = Similarity.coarseCodebook(
         Similarity.chunkEmbeddings(docs, size, stride, dims, nLabels))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
     val table = s"graft_stream_cemb_${UUID.randomUUID().toString.take(8)}"
-    val q = spark.readStream.schema(docSchema)
+    val q = readStream(spark).schema(docSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .transform(b => Similarity.chunkEmbeddingsFrom(
@@ -1478,10 +1488,9 @@ object StreamOps {
     import graft.functions.CountMin
     val root = stageDocRanges(spark, sfDir, 3)
     val table = s"graft_stream_cms_${UUID.randomUUID().toString.take(8)}"
-    configureStateStore(spark)
     val cms = org.apache.spark.sql.functions.udaf(
       new CountMin.CMSAgg(seed), org.apache.spark.sql.Encoders.scalaLong)
-    val q = spark.readStream.schema(docSchema)
+    val q = readStream(spark).schema(docSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
@@ -1590,7 +1599,7 @@ object StreamOps {
     val store = s"$tmp/graft_stream_pii/$runId/store"
     val ck = s"$tmp/graft_stream_pii/$runId/ck"
     val root = stageLangDocs(spark, sfDir, 3)
-    val q = spark.readStream.schema(langDocSchema)
+    val q = readStream(spark).schema(langDocSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -1638,7 +1647,7 @@ object StreamOps {
     val store = s"$tmp/graft_stream_bottomk/$runId/store"
     val ck = s"$tmp/graft_stream_bottomk/$runId/ck"
     val root = stageLangDocs(spark, sfDir, 3)
-    val q = spark.readStream.schema(langDocSchema)
+    val q = readStream(spark).schema(langDocSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -1691,7 +1700,7 @@ object StreamOps {
           concat(col("text"), lit(" rev2"))).otherwise(col("text")).as("text"),
         col("lang"))
     val root = stageRanges(incoming, "doc_id", 3)
-    val q = spark.readStream.schema(langDocSchema)
+    val q = readStream(spark).schema(langDocSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -2114,7 +2123,7 @@ object StreamOps {
     val victims = ev.filter(pmod(col("user_id"), lit(victimMod)) === 0)
       .select("user_id").distinct()
     val root = stageRanges(victims, "user_id", nBatches)
-    val q = spark.readStream
+    val q = readStream(spark)
       .schema(StructType(Seq(StructField("user_id", LongType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
@@ -2151,7 +2160,7 @@ object StreamOps {
       StructField("source", StringType)))
     val root = stageRanges(graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source"), "doc_id", 3)
-    val q = spark.readStream.schema(schema)
+    val q = readStream(spark).schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -2191,7 +2200,7 @@ object StreamOps {
     val ck = s"$tmp/graft_stream_kanon/$runId/ck"
     val cust = graft.Tables.customer(spark, sfDir)
     val root = stageRanges(cust, "c_custkey", 3)
-    val q = spark.readStream.schema(cust.schema)
+    val q = readStream(spark).schema(cust.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -2243,7 +2252,7 @@ object StreamOps {
     val parentKeys = graft.Tables.customer(spark, sfDir)
       .select(col("c_custkey").cast("long").as("_pk"))
     val root = stageRanges(ev, "event_id", 3)
-    val q = spark.readStream.schema(ev.schema)
+    val q = readStream(spark).schema(ev.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream
@@ -2351,7 +2360,7 @@ object StreamOps {
     val ck = s"$root0/ck"
     val li = graft.Tables.lineitem(spark, sfDir)
     val root = stageRanges(li, "l_orderkey", 3)
-    val q = spark.readStream.schema(li.schema)
+    val q = readStream(spark).schema(li.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$root/src")
       .writeStream

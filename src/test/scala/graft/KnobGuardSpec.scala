@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * overrides: library code under operators/streaming/sources/functions
   * may read only the settings listed here. A new `sys.env` or
   * `spark.graft.*` read there fails this suite until it is either
-  * removed or deliberately added to the list.
+  * removed or deliberately added to the list. Likewise every stream
+  * builder gets its reader from `StreamOps.readStream`, which configures
+  * the session first.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -17,27 +19,30 @@ class KnobGuardSpec extends AnyFunSuite {
     "SPARK_GRAFT_BPE_MAX_MERGES",      // BPE training budget
     "spark.graft.points.faultTolerant") // persist fallback for pointsOf
 
-  private val dirs =
-    Seq("operators", "streaming", "sources", "functions")
-      .map(d => Paths.get("src/main/scala/graft", d))
-
   private val envRead = """sys\.env[^"\n]*(?:"([^"]*)")?""".r
   private val confRead = """spark\.graft\.[A-Za-z0-9_.]+""".r
 
-  /** (file:line, setting) for every env or `spark.graft.` read. */
-  private def reads(): Seq[(String, String)] =
-    dirs.flatMap { d =>
+  /** (file:line, text) for every line of the sources under `names`. */
+  private def lines(names: String*): Seq[(String, String)] =
+    names.map(d => Paths.get("src/main/scala/graft", d)).flatMap { d =>
       assert(Files.isDirectory(d), s"$d not found — run from the repo root")
       Files.walk(d).iterator().asScala
         .filter(_.toString.endsWith(".scala")).toSeq
     }.flatMap { f: Path =>
-      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
+      Files.readAllLines(f).asScala.zipWithIndex.map { case (line, i) =>
+        s"$f:${i + 1}" -> line
+      }
+    }
+
+  /** (file:line, setting) for every env or `spark.graft.` read. */
+  private def reads(): Seq[(String, String)] =
+    lines("operators", "streaming", "sources", "functions").flatMap {
+      case (at, line) =>
         val keys =
           envRead.findAllMatchIn(line).map(m => Option(m.group(1))
             .getOrElse("sys.env")) ++
           confRead.findAllMatchIn(line).map(_.matched)
-        keys.map(k => s"$f:${i + 1}" -> k)
-      }
+        keys.map(at -> _)
     }
 
   test("library code reads only the three listed env/spark.graft settings") {
@@ -47,5 +52,17 @@ class KnobGuardSpec extends AnyFunSuite {
       stray.map { case (at, k) => s"  $at $k" }.mkString("\n"))
     // the scan sees the reads it allows, so it is not scanning nothing
     assert(found.map(_._2).toSet === allowed)
+  }
+
+  test("stream builders start from StreamOps.readStream, never a bare " +
+       "SparkSession.readStream") {
+    // `x.readStream` not followed by `(`: the session member, not the helper
+    val bare = """\.readStream\b(?!\s*\()""".r
+    val found = lines("streaming", "sources")
+      .filter { case (_, line) => bare.findFirstIn(line).isDefined }
+      .map(_._1)
+    // the one allowed is the helper's own body
+    assert(found.size === 1 && found.head.contains("streaming/StreamOps.scala:"),
+      "bare readStream (use StreamOps.readStream):\n" + found.mkString("\n"))
   }
 }
