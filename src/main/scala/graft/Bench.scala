@@ -3,51 +3,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SESSION shuffle width stays FIXED at the core count — a global
-      // initialPartitionNum=8x was measured (r16) to fix the one
-      // spill-bound sf10 stage (components fixpoint: 803 GiB spill ->
-      // 3.6 GiB, 798 -> 214 s) but to regress the sf0.1 suite 62%
-      // (45% of queries >1.2x, q_dsir_weights 17x): AQE's coalescing
-      // does not recover the wide-exchange overhead for range-
-      // partitioned/persisted stages. The one stage that NEEDS width
-      // now sizes itself from its own input stats (graft.Width scopes
-      // the widening inside the components operator), so the session
-      // default keeps the width the bench history was measured under.
-      .config("spark.ui.enabled", "false")
-      // same pin as Verify: NTZ→timestamp casts are session-TZ-dependent,
-      // so an unpinned bench on a non-UTC host would measure a different
-      // row set than the verified one
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JIT/classload warmup on a synthetic range — otherwise whichever
-    // query happens to run first is charged ~5 s of one-time JVM warmup
-    // (codegen compiler, parquet/noop writer classloading) that belongs
-    // to no query. The warmup touches no benchmark table and no query
-    // plan, so per-query numbers stay honest.
-    spark.range(1 << 20).selectExpr("sum(id) as s", "count(distinct id % 1000) as d")
-      .write.format("noop").mode("overwrite").save()
-    // table warm-up, also untimed: scan every benchmark table once plus
-    // one trivial real query, so parquet-footer reads, OS page-cache
-    // population, and first-scan codegen land OUTSIDE the measurements.
-    // Driver-side 1-rep captures have twice mis-priced whole rounds
-    // (r7 +8%, r8 +89% phantom) purely on cold-start cost; after this
-    // pass even a REPS=1 run measures warm scans, like the medians do.
-    for (t <- Seq(Tables.region _, Tables.nation _, Tables.customer _,
-                  Tables.supplier _, Tables.part _, Tables.orders _,
-                  Tables.lineitem _, Tables.events _, Tables.documents _,
-                  Tables.embeddings _))
-      try t(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] warmup scan failed: ${e.getMessage}")
-      }
-    try SparkEntry.queries("q6_forecast_revenue")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case scala.util.control.NonFatal(_) => () }
+    // the session shuffle width stays FIXED at the core count (Run.cpus)
+    val spark = Run.session()
+    // every measured run is recorded in the work ledger; the untimed
+    // warmup below is its "_warmup" entry, whose storage_after_bytes is
+    // the baseline each query's release returns to
+    val ledger = Ledger.attach(spark)
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query names for targeted
     // local runs (regression triage); unset = full suite, as the driver runs it.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -62,27 +23,54 @@ object Bench {
         SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    // memo warm-up, also untimed: the pretrainPacked / retrievalTiers
-    // localCheckpoint memos are one-time shared assets (like JIT) that
-    // survive clearCache by design; without this pass a reps=1 run
-    // charges the whole build (~78 s at sf0.1) to whichever memo-backed
-    // query happens to run first, while 3-rep medians measure warm
-    // reads — the two protocols must price the same thing. One query
-    // per memo family suffices (both members share the build); only
-    // families actually selected are warmed, so targeted ONLY runs on
-    // unrelated queries don't pay it.
-    val memoFamilies = Seq(
-      Seq("q_retrieval_eval", "q_retrieval_ndcg"),     // tiersMemo
-      Seq("q_pipeline_pretrain", "q_pretrain_manifest"), // packedMemo
-      Seq("q_stream_doc_fresh"))                       // docIndexMemo
-    for (fam <- memoFamilies; w <- fam.find(selected.contains).toSeq)
-      try {
-        System.err.println(s"[bench] untimed memo warmup: $w")
-        selected(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] memo warmup $w failed: ${e.getMessage}")
-      }
-    spark.catalog.clearCache()
+    // JIT/classload warmup on a synthetic range — otherwise whichever
+    // query happens to run first is charged ~5 s of one-time JVM warmup
+    // (codegen compiler, parquet/noop writer classloading) that belongs
+    // to no query. The warmup touches no benchmark table and no query
+    // plan, so per-query numbers stay honest.
+    ledger(Warmup) {
+      spark.range(1 << 20).selectExpr("sum(id) as s", "count(distinct id % 1000) as d")
+        .write.format("noop").mode("overwrite").save()
+      // table warm-up, also untimed: scan every benchmark table once plus
+      // one trivial real query, so parquet-footer reads, OS page-cache
+      // population, and first-scan codegen land OUTSIDE the measurements.
+      // Driver-side 1-rep captures have twice mis-priced whole rounds
+      // (r7 +8%, r8 +89% phantom) purely on cold-start cost; after this
+      // pass even a REPS=1 run measures warm scans, like the medians do.
+      for (t <- Seq(Tables.region _, Tables.nation _, Tables.customer _,
+                    Tables.supplier _, Tables.part _, Tables.orders _,
+                    Tables.lineitem _, Tables.events _, Tables.documents _,
+                    Tables.embeddings _))
+        try t(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] warmup scan failed: ${e.getMessage}")
+        }
+      try SparkEntry.queries("q6_forecast_revenue")(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case scala.util.control.NonFatal(_) => () }
+      // memo warm-up, also untimed: the pretrainPacked / retrievalTiers
+      // localCheckpoint memos are one-time shared assets (like JIT) that
+      // survive clearCache by design; without this pass a reps=1 run
+      // charges the whole build (~78 s at sf0.1) to whichever memo-backed
+      // query happens to run first, while 3-rep medians measure warm
+      // reads — the two protocols must price the same thing. One query
+      // per memo family suffices (both members share the build); only
+      // families actually selected are warmed, so targeted ONLY runs on
+      // unrelated queries don't pay it.
+      val memoFamilies = Seq(
+        Seq("q_retrieval_eval", "q_retrieval_ndcg"),     // tiersMemo
+        Seq("q_pipeline_pretrain", "q_pretrain_manifest"), // packedMemo
+        Seq("q_stream_doc_fresh"))                       // docIndexMemo
+      for (fam <- memoFamilies; w <- fam.find(selected.contains).toSeq)
+        try {
+          System.err.println(s"[bench] untimed memo warmup: $w")
+          selected(w)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] memo warmup $w failed: ${e.getMessage}")
+        }
+    }
+    Run.release(spark)
+    ledger.storageAfter(Warmup)
     // noop sink materializes every projected column through the whole plan
     // (a bare count() would let Catalyst prune expression work). Cache is
     // cleared between queries so each timing is isolated: persisted
@@ -102,30 +90,20 @@ object Bench {
       System.err.println(
         "[bench] WARNING: reps=1 — single-run timings are jitter-prone; " +
         "set SPARK_GRAFT_BENCH_REPS=3 for median-of-3 (the intended protocol)")
+    // each run is the query's ledger entry (a later rep replaces it)
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // checkpoint blocks are invisible to clearCache (not
-      // cache-manager-owned) — without this the pointsOf/docVectors/
-      // fixpoint-label checkpoints of every query accumulate in block
-      // storage across the 309-query run until the ContextCleaner GCs
-      // them, and that nondeterministic pressure taxed later queries
-      // (r17's one-sided 0.78-0.90x band). Memo assets are not
-      // registry-tracked and survive, per the untimed-warmup protocol.
-      CacheRegistry.releaseCheckpoints()
-      // streaming memory sinks register UUID-named temp views that the
-      // CacheManager does not own — drop them or their full results pile
-      // up on the driver heap across the run
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
+      val (ok, dt) = ledger(name) {
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            false
+          }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
+      Run.release(spark)
+      ledger.storageAfter(name)
       // a failed query records a negative sentinel, never a fake fast time
       if (ok) dt else -dt
     }
@@ -156,11 +134,7 @@ object Bench {
     val results = perQuery.map { case (k, (v, _)) => k -> v }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // locale-independent 3-decimal formatting: the f-interpolator uses
-    // the JVM default locale, and a comma-decimal locale (de_DE) would
-    // emit unparseable JSON
-    def d3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Run.d3
     // per-query rep spread [min, median, max]: mover adjudication reads
     // oscillation width from the artifact instead of re-running isolated
     // pins. Only meaningful (and only emitted) at reps >= 2.
@@ -210,7 +184,9 @@ object Bench {
         s""""$k":{"first":${d3(f0)},"rerun":${d3(r)}}"""
       }.mkString(""","retried":{""", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$spread$retriedJson,"sf":"$sfDir"}"""
+    val work = (Warmup +: results.keys.toSeq)
+      .map(k => s"${Run.str(k)}:${ledger.work(k).toJson}").mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$spread$retriedJson,"sf":"$sfDir","work":$work}"""
     // stdout gets a line that FITS THE CALLER'S CAPTURE: the driver
     // keeps only the last ~2000 chars of output, and the full 296-entry
     // map is ~8 KB — every BENCH_r* artifact through round 13 recorded
@@ -259,6 +235,9 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
+    ledger.close()
     spark.stop()
   }
+
+  private val Warmup = "_warmup"
 }

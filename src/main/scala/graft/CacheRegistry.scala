@@ -89,8 +89,6 @@ object CacheRegistry {
     df
   }
 
-  private[graft] def checkpointCount: Int = synchronized(checkpoints.size)
-
   /** Release the storage behind every registered checkpoint frame and
     * forget them. Safe at any eager boundary: a released checkpoint's
     * frame must not be re-consumed afterwards (lineage is truncated, so
@@ -181,16 +179,15 @@ object CacheRegistry {
     * forget them. Safe to call at any eager boundary;
     * already-unpersisted entries (e.g. after a session clearCache) are a
     * no-op.
-    */
-  /** NOTE: deliberately does NOT release registered checkpoints —
-    * release() is documented as safe at any eager boundary, which
-    * holds for persists (dropping a cache leaves the recompute path)
-    * and memos (cleared entries rebuild on next use) but NOT for
-    * checkpoint blocks (lineage truncated, no recompute path): callers
-    * legitimately release() between two consumers of one operator
-    * result. Checkpoint release is the stronger, explicitly-scoped
-    * [[releaseCheckpoints]] — callable only where no live frame will
-    * be re-consumed (Bench between queries).
+    *
+    * Deliberately does NOT release registered checkpoints: safety at
+    * any eager boundary holds for persists (dropping a cache leaves the
+    * recompute path) and memos (cleared entries rebuild on next use) but
+    * NOT for checkpoint blocks (lineage truncated, no recompute path),
+    * and callers legitimately release() between two consumers of one
+    * operator result. Checkpoint release is the stronger,
+    * explicitly-scoped [[releaseCheckpoints]] — callable only where no
+    * live frame will be re-consumed (between queries, [[Run.release]]).
     */
   def release(): Unit = synchronized {
     tracked.foreach(_.unpersist(blocking = false))

@@ -1,35 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the default in-process master — the
     // multi-JVM gate: `local-cluster[n,cores,mem]` forks REAL executor
-    // processes (requires SPARK_HOME + SPARK_SCALA_VERSION, the
-    // ClusterProbe recipe), so the same 297-query oracle run exercises
+    // processes (see Run.session), so the same oracle run exercises
     // closure serialization, executor-side file access, and remote
     // block placement — the execution regime local[*] structurally
-    // cannot cover. Library classes ship via executor extraClassPath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      val classes = sys.props.getOrElse("graft.classes.dir",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      builder
-        .config("spark.executor.extraClassPath", classes)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "4g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cannot cover.
+    val spark = Run.session(sys.env.getOrElse("SPARK_GRAFT_MASTER", Run.local))
     new java.io.File(outDir).mkdirs()
     // dev-only subset knob (comma-separated names); unset → the full
     // driver contract. Lets a single query round-trip through the DuckDB
@@ -47,20 +29,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Run.str(k)}: ${Run.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

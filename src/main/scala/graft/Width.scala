@@ -1,7 +1,17 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graftbridge.ListenerBridge
+
+/** One width decision: `site` sized from `bytes` of estimated input got
+  * `width` partitions (for the spread, the session width or `keep`),
+  * against a session width of `session`. Posted on the SparkContext's
+  * listener bus; [[Ledger]] files it under the running query.
+  */
+final case class WidthDecision(site: String, bytes: BigInt, width: String,
+                               session: Int) extends SparkListenerEvent
 
 /** The one width rule: how many shuffle or state partitions a
   * data-sized stage gets, and the one scoped conf flip that applies it.
@@ -34,7 +44,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * every consumer is partitioning-blind — so the oracle gate is
   * width-blind. There are no per-site overrides: a deployment sizes
   * the session (`spark.sql.shuffle.partitions`) and the data sizes the
-  * rest. Each decision logs one `[width]` line on stderr.
+  * rest. Each decision is posted as one [[WidthDecision]] event.
   */
 object Width {
 
@@ -89,17 +99,17 @@ object Width {
   private def sessionWidth(input: DataFrame): Int =
     input.sparkSession.sessionState.conf.numShufflePartitions
 
-  private def log(site: String, bytes: BigInt, width: String,
-                  session: Int): Unit =
-    System.err.println(
-      s"[width] site=$site bytes=$bytes width=$width session=$session")
+  private def post(input: DataFrame, site: String, bytes: BigInt,
+                   width: String, session: Int): Unit =
+    ListenerBridge.post(input.sparkSession.sparkContext,
+      WidthDecision(site, bytes, width, session))
 
   /** The uncapped rule: may exceed the session width. */
   def of(site: String, input: DataFrame,
          bytesPerPart: Long = PartBytes): Int = {
     val bytes = statsBytes(input)
     val w = ofBytes(bytes, bytesPerPart)
-    log(site, bytes, w.toString, sessionWidth(input))
+    post(input, site, bytes, w.toString, sessionWidth(input))
     w
   }
 
@@ -108,7 +118,7 @@ object Width {
     val bytes = statsBytes(input)
     val session = sessionWidth(input)
     val w = math.min(session, ofBytes(bytes, PartBytes))
-    log(site, bytes, w.toString, session)
+    post(input, site, bytes, w.toString, session)
     w
   }
 
@@ -119,7 +129,7 @@ object Width {
     val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
     val session = sessionWidth(batch)
     val on = bytes >= BigInt(session) * SpreadBytesPerTask
-    log(site, bytes, if (on) session.toString else "keep", session)
+    post(batch, site, bytes, if (on) session.toString else "keep", session)
     on
   }
 

@@ -1629,7 +1629,7 @@ object Similarity {
     * the vector's filterable metadata (label) inline — so the filter is
     * a pushed-down scan predicate on the inverted lists, not a join
     * against an external metadata table: filtered serves scan strictly
-    * fewer rows AND add zero shuffles (the 16× ScaleProbe caught the
+    * fewer rows AND add zero shuffles (a 16×-amplified run caught the
     * earlier semi-join formulation costing more than the rows it
     * removed at small scale).
     *

@@ -35,16 +35,17 @@ object StreamOps {
 
   /** STATE-STORE PROVIDER seam. The default HDFSBackedStateStoreProvider
     * keeps every stateful operator's state on the executor HEAP (disk is
-    * only the checkpoint copy); at 100× the session/join/dedup state the
-    * scale probes measure, heap-resident state is the first thing to fall
+    * only the checkpoint copy); at 100× the session/join/dedup state of
+    * the test data, heap-resident state is the first thing to fall
     * over. RocksDBStateStoreProvider (bundled with Spark + rocksdbjni)
     * keeps working state off-heap with native spill — the production
     * configuration for large state. Selected per session via
     * env SPARK_GRAFT_STATESTORE (rocksdb | hdfs; unset = Spark default)
     * or programmatically; applied by every stream builder in this object
     * through [[readStream]], so all q_stream_* queries run identically
-    * under either provider (asserted in StreamingSpec, measured in
-    * StreamScaleProbe).
+    * under either provider (asserted in StreamingSpec; each drain's state
+    * rows are in Bench's work ledger, and the providers' heap cost is
+    * perfbench's `heap_retained_mb`).
     *
     * It also installs [[graft.io.LocalFs]] as `FileContext`'s `file:`
     * filesystem, which every checkpoint manager built afterwards uses for
@@ -2963,14 +2964,14 @@ object StreamOps {
     !(m == "local" || m.startsWith("local["))
   }
 
-  /** Frames-parametric core of [[streamMvJoin]] (the ScaleProbe seam). */
-  /** `bucketedStores` selects the base-store layout: bucketed tables
+  /** Frames-parametric core of [[streamMvJoin]].
+    * `bucketedStores` selects the base-store layout: bucketed tables
     * (cluster default — zero Exchange above the history scans; total
     * shuffle volume ≈ one pass over the facts regardless of batch
     * count) vs plain batch=N parquet dirs (local default — no
     * write-side bucketing shuffle, but every batch re-shuffles the
     * WHOLE accumulated history: total shuffle ≈ facts·(nBatches−1)/2
-    * per side). The crossover is the history/batch ratio — ScaleProbe
+    * per side). The crossover is the history/batch ratio — ClusterProbe
     * measures both at depth; `None` picks by [[defaultBucketedStores]].
     */
   def streamMvJoinFrames(spark: SparkSession, ordersRaw: DataFrame,

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.{Ledger, Run}
 
 /** Dev tool: the first MULTI-EXECUTOR measurement in this build —
   * `local-cluster[n, cores, mem]` launches REAL separate executor JVMs
@@ -14,28 +13,18 @@ import org.apache.spark.sql.functions._
   * actually serialize — evidence that the cluster-default layout is the
   * right call where network exists, not just an argument about it.
   *
-  * `runMain graft.tools.ClusterProbe [master] [sfDir]` — master
+  * `runMain graft.tools.ClusterProbe [master] [sfDir] [depth]` — master
   * defaults to local-cluster[4,8,6144]; requires SPARK_HOME (the
-  * standalone-ish workers are forked from the distribution) and ships
-  * the library classes to executors via spark.executor.extraClassPath.
+  * standalone-ish workers are forked from the distribution); the session
+  * is [[graft.Run.session]], so set SPARK_GRAFT_CPUS to the cluster's
+  * cores (32 for the default master) for a shuffle width that uses them.
+  * Shuffle bytes come from the work ledger ([[graft.Ledger]]).
   */
 object ClusterProbe {
   def main(args: Array[String]): Unit = {
     val master = if (args.length > 0) args(0) else "local-cluster[4,8,6144]"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val classes = sys.props.getOrElse("graft.classes.dir",
-      new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.extraClassPath", classes)
-      // the workers fork with the distribution's defaults; keep the
-      // probe hermetic to the suite's memory expectations
-      .config("spark.executor.memory", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(master)
     // GRAFT_PROBE_NO_BROADCAST=1 models the regime a 100 TB deployment
     // actually hits: a micro-batch delta LARGER than any broadcast
     // budget. At every single-box-stageable scale the delta fits the
@@ -55,36 +44,19 @@ object ClusterProbe {
 
     // SHUFFLE-BYTE accounting (round 15): the layout cost model is
     // `history_bytes × price-per-byte` arithmetic, so the probe records
-    // the bytes, not just the wall time — per-measurement shuffle
-    // write/read totals summed across all task ends. Listener delivery
-    // is async; the short settle sleep before reading the counters is
-    // plenty for a probe (single-digit GB/s of events it is not).
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            ()
-          }
-        }
-      })
-
+    // the bytes, not just the wall time
+    val ledger = Ledger.attach(spark)
     def time(name: String)(f: => Long): Unit = {
-      Thread.sleep(800)
-      val (w0, r0) = (shufWrite.get(), shufRead.get())
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800) // let straggler task-end events drain
-      val (dw, dr) = (shufWrite.get() - w0, shufRead.get() - r0)
+      val (r, dt) = ledger(name) {
+        val t0 = System.nanoTime()
+        val r = f
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      val w = ledger.work(name)
       println(f"CLUSTER $name: $dt%.1f s ($r rows) " +
-        f"shuffle_write=${dw / 1048576.0}%.1f MiB shuffle_read=${dr / 1048576.0}%.1f MiB")
-      spark.catalog.clearCache()
+        f"shuffle_write=${w.shuffleWriteBytes / 1048576.0}%.1f MiB " +
+        f"shuffle_read=${w.shuffleReadBytes / 1048576.0}%.1f MiB")
+      Run.release(spark)
     }
 
     // shuffle-heavy headline queries: the plans that pay real
@@ -101,7 +73,7 @@ object ClusterProbe {
     // plain layout crosses process boundaries. Depth matters: at 3
     // batches there is barely any history and the bucketed write
     // overhead dominates; the cluster story is the accumulated-history
-    // regime (default depth 8, the 16x-probe protocol).
+    // regime (default depth 8).
     val depth = if (args.length > 2) args(2).toInt else 8
     val o = graft.Tables.orders(spark, sfDir)
     val l = graft.Tables.lineitem(spark, sfDir)

@@ -1,11 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize a 10×-amplified warehouse (sf0.1 → "sf1") for
   * the one-decade scale anchor — `runMain graft.tools.MakeSf1
-  * <srcSfDir> <outDir> [factor]`.
+  * <srcSfDir> <outDir> [factor]`. A scale point is this, then Bench on
+  * the result (`SPARK_GRAFT_SF_DIR=<outDir>`), whose work ledger records
+  * each query's counters at that scale.
   *
   * Amplification follows the driver's own scaling shape (TESTDATA.md:
   * row counts scale linearly with sf; tiny dims stay tiny;
@@ -14,8 +16,8 @@ import org.apache.spark.sql.functions._
   * o_orderkey together and customer/part/supplier FKs consistently, so
   * referential integrity holds at the amplified scale; events shift
   * (event_id, user_id) pairs; documents rotate their text per replica
-  * (the ScaleProbe device — replicas are near- but not exact dups, so
-  * dedup operators see realistic work); embeddings shift vec_id.
+  * (replicas are near- but not exact dups, so dedup operators see
+  * realistic work); embeddings shift vec_id.
   * region/nation are fixed-size dimensions at every sf and are copied.
   * Timing-focused: values repeat across replicas (fine for plan-shape
   * and throughput anchors; NOT a correctness corpus — the DuckDB gate
@@ -26,12 +28,7 @@ object MakeSf1 {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Run.session()
 
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).head.getLong(0) + 1L

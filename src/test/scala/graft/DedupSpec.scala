@@ -37,6 +37,22 @@ class DedupSpec extends SparkSpec {
     assert(sketch === exact)
   }
 
+  /** `body`'s result and the width decisions it posted. */
+  private def decisions[A](body: => A): (A, Seq[WidthDecision]) = {
+    val posted = new java.util.concurrent.ConcurrentLinkedQueue[WidthDecision]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match { case d: WidthDecision => posted.add(d); () case _ => }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+      (a, posted.toArray(Array.empty[WidthDecision]).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
   test("Width rules over range stats: uncapped, capped, 8 MiB state, " +
        "spread boundary") {
     // r18: no session floor — a KB-sized input runs the fixpoint NARROW
@@ -61,12 +77,16 @@ class DedupSpec extends SparkSpec {
       ("state", 1L << 22, 8),
       ("state", 1000L, 1))
     table.foreach { case (rule, n, want) =>
-      val got = rule match {
-        case "uncapped" => Width.of("test", rows(n))
-        case "capped" => Width.capped("test", rows(n))
-        case "state" => Width.of("test", rows(n), Width.StateBytes)
+      val (got, posted) = decisions {
+        rule match {
+          case "uncapped" => Width.of("test", rows(n))
+          case "capped" => Width.capped("test", rows(n))
+          case "state" => Width.of("test", rows(n), Width.StateBytes)
+        }
       }
       assert(got === want, s"$rule over $n rows")
+      // each decision is one event on the listener bus, read directly
+      assert(posted === Seq(WidthDecision("test", BigInt(16 * n), want.toString, session)))
     }
     // the spread engages once the RAW estimate reaches session × 4 MiB:
     // 4 × 4 MiB = 16 MiB = 2^21 rows of 8 bytes

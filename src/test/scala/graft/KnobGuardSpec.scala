@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.graft.*` read there fails this suite until it is either
   * removed or deliberately added to the list. Likewise every stream
   * builder gets its reader from `StreamOps.readStream`, which configures
-  * the session first.
+  * the session first, and every main gets its session from
+  * `Run.session`.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -22,9 +23,10 @@ class KnobGuardSpec extends AnyFunSuite {
   private val envRead = """sys\.env[^"\n]*(?:"([^"]*)")?""".r
   private val confRead = """spark\.graft\.[A-Za-z0-9_.]+""".r
 
-  /** (file:line, text) for every line of the sources under `names`. */
+  /** (file:line, text) for every line of the sources under `names`,
+    * relative to src/main/scala. */
   private def lines(names: String*): Seq[(String, String)] =
-    names.map(d => Paths.get("src/main/scala/graft", d)).flatMap { d =>
+    names.map(d => Paths.get("src/main/scala", d)).flatMap { d =>
       assert(Files.isDirectory(d), s"$d not found — run from the repo root")
       Files.walk(d).iterator().asScala
         .filter(_.toString.endsWith(".scala")).toSeq
@@ -36,7 +38,8 @@ class KnobGuardSpec extends AnyFunSuite {
 
   /** (file:line, setting) for every env or `spark.graft.` read. */
   private def reads(): Seq[(String, String)] =
-    lines("operators", "streaming", "sources", "functions").flatMap {
+    lines("graft/operators", "graft/streaming", "graft/sources",
+          "graft/functions").flatMap {
       case (at, line) =>
         val keys =
           envRead.findAllMatchIn(line).map(m => Option(m.group(1))
@@ -58,11 +61,21 @@ class KnobGuardSpec extends AnyFunSuite {
        "SparkSession.readStream") {
     // `x.readStream` not followed by `(`: the session member, not the helper
     val bare = """\.readStream\b(?!\s*\()""".r
-    val found = lines("streaming", "sources")
+    val found = lines("graft/streaming", "graft/sources")
       .filter { case (_, line) => bare.findFirstIn(line).isDefined }
       .map(_._1)
     // the one allowed is the helper's own body
     assert(found.size === 1 && found.head.contains("streaming/StreamOps.scala:"),
       "bare readStream (use StreamOps.readStream):\n" + found.mkString("\n"))
+  }
+
+  test("every main builds its session through Run.session, the one " +
+       "session builder in src/main") {
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val found = lines("graft", "org")
+      .filter { case (_, line) => builder.findFirstIn(line).isDefined }
+      .map(_._1)
+    assert(found.size === 1 && found.head.contains("graft/Run.scala:"),
+      "session builders outside Run.session:\n" + found.mkString("\n"))
   }
 }

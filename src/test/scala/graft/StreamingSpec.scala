@@ -691,7 +691,7 @@ class StreamingSpec extends SparkSpec {
   test("mv-join store layouts agree: bucketed tables and plain batch " +
        "dirs maintain the identical view") {
     // the layout is a deployment knob (bucketed = cluster-right, plain =
-    // local-fast; the ScaleProbe documents the tradeoff) — it must never
+    // local-fast; ClusterProbe measures the tradeoff) — it must never
     // be a semantics knob
     val o = Tables.orders(spark, sf0001)
     val l = Tables.lineitem(spark, sf0001)
