@@ -1,6 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+
+  /** The form Bench times for `name`. Bench prices the production plan:
+    * a sketch query whose declared form bundles the oracle gate's exact
+    * audit twin is timed in its estimate-only form
+    * ([[SparkEntry.benchForms]]). Verify keeps the declared form, so
+    * correctness coverage is unchanged.
+    */
+  def formOf(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.benchForms.getOrElse(name, SparkEntry.queries(name))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the session shuffle width stays FIXED at the core count (Run.cpus)
@@ -91,7 +101,7 @@ object Bench {
         "[bench] WARNING: reps=1 — single-run timings are jitter-prone; " +
         "set SPARK_GRAFT_BENCH_REPS=3 for median-of-3 (the intended protocol)")
     // each run is the query's ledger entry (a later rep replaces it)
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val (ok, dt) = ledger(name) {
         val t0 = System.nanoTime()
         val ok =
@@ -107,19 +117,11 @@ object Bench {
       // a failed query records a negative sentinel, never a fake fast time
       if (ok) dt else -dt
     }
-    val perQuery = selected.map { case (name, fn) =>
-      // bench prices the production plan: sketch queries whose DECLARED
-      // form bundles the oracle gate's exact audit twin time their
-      // estimate-only form here (SparkEntry.benchForms) — Verify keeps
-      // the audit form, so correctness coverage is unchanged
-      val benchFn = SparkEntry.benchForms.get(name) match {
-        case Some(f) =>
-          System.err.println(s"[bench] $name: timing production form " +
-            "(declared form is the oracle-gate audit)")
-          f
-        case None => fn
-      }
-      val times = (1 to reps).map(_ => runOnce(name, benchFn))
+    val perQuery = selected.map { case (name, _) =>
+      if (SparkEntry.benchForms.contains(name))
+        System.err.println(s"[bench] $name: timing production form " +
+          "(declared form is the oracle-gate audit)")
+      val times = (1 to reps).map(_ => runOnce(name, formOf(name)))
       // any failed rep poisons the query: report the (negative) sentinel
       val v = if (times.exists(_ < 0)) times.min
               else {
@@ -175,7 +177,7 @@ object Bench {
           .map { case (k, first) =>
             System.err.println(s"[bench] outlier re-measure: $k first=" +
               d3(first) + " s > 2x spread max " + d3(spreadMax(k)) + " s")
-            k -> (first, runOnce(k, selected(k)))
+            k -> (first, runOnce(k, formOf(k)))
           }
       }
     val retriedJson =

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,6 +41,8 @@ final class Ledger private (spark: SparkSession) {
   private val stageTag = mutable.HashMap.empty[Int, String]
   // job id → (tag, start ms, call site, stage ids)
   private val jobStart = mutable.HashMap.empty[Int, (String, Long, String, Seq[Int])]
+  // running SQL execution id → its description (the action's call site)
+  private val executions = mutable.HashMap.empty[Long, String]
   @volatile private var current = Untagged
 
   private def entry(tag: String): Work = entries.getOrElseUpdate(tag, new Work)
@@ -51,8 +54,11 @@ final class Ledger private (spark: SparkSession) {
       val tag = prop(TagKey).getOrElse(Untagged)
       entry(tag).jobs += 1
       e.stageIds.foreach(stageTag(_) = tag)
-      // the result stage (the job's last) is named after the job's call site
+      // jobs that AQE or a broadcast submits from Spark's async threads
+      // carry no call site of their own: name them after their SQL
+      // execution, then after the result stage (the job's last)
       val site = prop("callSite.short")
+        .orElse(prop(SQLExecution.EXECUTION_ID_KEY).flatMap(id => executions.get(id.toLong)))
         .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)).getOrElse("?")
       jobStart(e.jobId) = (tag, e.time, site, e.stageIds)
     }
@@ -90,6 +96,10 @@ final class Ledger private (spark: SparkSession) {
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case d: WidthDecision => Ledger.this.synchronized { entry(current).widths += d; () }
+      case s: SparkListenerSQLExecutionStart =>
+        Ledger.this.synchronized { executions(s.executionId) = s.description }
+      case s: SparkListenerSQLExecutionEnd =>
+        Ledger.this.synchronized { executions.remove(s.executionId); () }
       case _ =>
     }
   }

@@ -44,15 +44,16 @@ object Run {
     * same storage: cached plans; registry-tracked checkpoints, which
     * clearCache does not own and which otherwise pile up in block
     * storage until the ContextCleaner collects them (r17's one-sided
-    * 0.78-0.90x band as a 309-query run aged); and the `graft_stream_`
-    * temp views of streaming memory sinks, whose results otherwise stay
-    * on the driver heap. Memo assets are not registry-tracked and stay.
+    * 0.78-0.90x band as a 309-query run aged); and the temp views of
+    * streaming memory sinks ([[streaming.StreamOps.MemorySinkPrefix]]),
+    * whose results otherwise stay on the driver heap. Memo assets are not
+    * registry-tracked and stay.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     CacheRegistry.releaseCheckpoints()
     spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_stream_"))
+      .filter(_.name.startsWith(streaming.StreamOps.MemorySinkPrefix))
       .foreach(t => spark.catalog.dropTempView(t.name))
   }
 

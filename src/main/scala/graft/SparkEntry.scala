@@ -27,8 +27,7 @@ object SparkEntry {
     // --- reference surface: landing pipeline + events (S2, S4, A1-A5, P8, T4, F1-F2) ---
     "q_land_partitioned" -> ((s, d) =>
       Landing.landPartitionedJson(events(s, d), col("ts"), Seq("event_id"),
-        s"${sys.props("java.io.tmpdir")}/graft_land/${d.replaceAll("[^a-zA-Z0-9]", "_")}")
-        .orderBy("y", "m", "d", "h")),
+        Scratch.dir("land")).orderBy("y", "m", "d", "h")),
     "q_time_bucket" -> ((s, d) => Events.timeBucketCounts(events(s, d))),
     "q_anomaly_mad" -> ((s, d) => Events.anomalyMad(events(s, d))),
     "q_session_paths" -> ((s, d) => Events.sessionPaths(events(s, d))),
@@ -467,7 +466,7 @@ object SparkEntry {
     * Verify keeps the audit forms as the oracle gate. Queries absent
     * here bench their declared form unchanged.
     */
-  def benchForms: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val benchForms: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_profile_sketch" -> ((s, d) =>
       streaming.StreamOps.streamProfile(s, d)),
     "q_stream_sliding_distinct" -> ((s, d) =>

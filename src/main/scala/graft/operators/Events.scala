@@ -1195,19 +1195,6 @@ object Events {
       .orderBy("stage")
   }
 
-  /** One per-JVM root for the z-ordered layout, removed at exit so
-    * repeated verify/bench runs never leak table directories.
-    */
-  private lazy val zorderRoot: String = {
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_zorder/" +
-        java.util.UUID.randomUUID().toString)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      catch { case scala.util.control.NonFatal(_) => () }))
-    dir.toString
-  }
-
   /** Z-ordered two-dimensional layout + selective scan (q_zorder_scan):
     * events written clustered by the Morton key of (user_id, day) —
     * range-repartitioned and sorted within partitions on the interleaved
@@ -1225,8 +1212,7 @@ object Events {
   def zorderScan(spark: org.apache.spark.sql.SparkSession,
                  events: DataFrame): DataFrame = {
     import graft.functions.ZOrder
-    val layoutDir =
-      s"$zorderRoot/${java.util.UUID.randomUUID().toString.take(8)}"
+    val layoutDir = graft.Scratch.dir("zorder")
     val keyed = events.withColumn("day", dayofmonth(col("ts")))
     val stats = keyed.agg(
       min("user_id").as("ulo"), max("user_id").as("uhi"),

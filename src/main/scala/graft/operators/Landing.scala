@@ -83,16 +83,15 @@ object Landing {
       .agg(count(lit(1)).as("n_events"))
   }
 
-  /** Full land→compact cycle over fresh temp dirs: dedup + bucket +
+  /** Full land→compact cycle over a fresh scratch dir: dedup + bucket +
     * hour-partitioned JSON landing, then day-level parquet compaction.
     * (The streaming ingest variant of the same layout is measured
     * separately by q_stream_land.)
     */
   def landCompactCycle(df: DataFrame, ts: Column, key: Seq[String]): DataFrame = {
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val outDir = s"$tmp/graft_compact_in/$runId"
-    val compactDir = s"$tmp/graft_compact_out/$runId"
+    val root = graft.Scratch.dir("compact")
+    val outDir = s"$root/in"
+    val compactDir = s"$root/out"
     val dataSchema = writeLandedJson(
       bucketedWithLandId(dedup(df, key), ts), outDir)
     compactLanded(df.sparkSession, outDir, dataSchema, compactDir)
@@ -147,8 +146,7 @@ object Landing {
     */
   def forgetUsers(events: DataFrame, victimMod: Long = 97L,
                   nBuckets: Int = 16): DataFrame = {
-    val baseDir = s"${sys.props("java.io.tmpdir")}/graft_forget/" +
-      java.util.UUID.randomUUID().toString
+    val baseDir = graft.Scratch.dir("forget")
     // the census is localCheckpoint-materialized, so the scratch store
     // can be deleted EAGERLY — a long-lived session (bench rounds) must
     // not accumulate a table-sized copy and a shutdown hook per call

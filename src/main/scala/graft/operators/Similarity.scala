@@ -1987,31 +1987,11 @@ object Similarity {
       k, nprobe)
   }
 
-  /** Per-JVM root for throwaway index artifacts, registered for
-    * recursive deletion at JVM exit by ONE shared shutdown hook (one
-    * hook per newIndexDir call accumulated JVM threads for the
-    * session's lifetime). The root carries its own UUID so a
-    * concurrently-running JVM's live indexes are never deleted; eager
-    * per-call deletion stays unsafe because returned DataFrames read
-    * the artifact files lazily.
+  /** A fresh per-invocation dir for throwaway index artifacts. It is not
+    * deleted per call: returned DataFrames read the artifact files
+    * lazily. [[graft.Scratch]] removes it at JVM exit.
     */
-  private lazy val indexRoot: String = {
-    val root = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_ivfpq_index_" +
-        java.util.UUID.randomUUID().toString)
-    val hook = new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(root)
-      catch { case scala.util.control.NonFatal(_) => () })
-    Runtime.getRuntime.addShutdownHook(hook)
-    root.toString
-  }
-
-  /** A fresh per-invocation index directory under the shared
-    * [[indexRoot]]; the full UUID removes the collision window an
-    * 8-char prefix left open.
-    */
-  private[operators] def newIndexDir(): String =
-    s"$indexRoot/${java.util.UUID.randomUUID().toString}"
+  private[operators] def newIndexDir(): String = graft.Scratch.dir("ivfpq_index")
 
   /** Oracle-facing incremental round-trip: TRAIN the index on the
     * vec_id >= `splitId` slice only, APPEND the rest against the frozen

@@ -730,26 +730,9 @@ object TextAnalysis {
       spark.read.parquet(dir).select("doc_id", "term", "tf"), nQueries, k)
   }
 
-  /** Per-JVM root for throwaway artifact stores (posting stores, vector
-    * stores, MV stores), deleted at JVM exit by ONE shared shutdown hook
-    * — the same fix as Similarity.indexRoot (one hook per call
-    * accumulated JVM threads); the root's own UUID keeps concurrent
-    * JVMs' live stores safe from each other.
-    */
-  private lazy val storeRoot: String = {
-    val root = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_store_" +
-        java.util.UUID.randomUUID().toString)
-    val hook = new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(root)
-      catch { case scala.util.control.NonFatal(_) => () })
-    Runtime.getRuntime.addShutdownHook(hook)
-    root.toString
-  }
-
-  /** A fresh per-run artifact-store directory under [[storeRoot]]. */
-  private[graft] def newStoreDir(): String =
-    s"$storeRoot/${java.util.UUID.randomUUID().toString}"
+  /** A fresh per-run dir for a throwaway artifact store (posting store,
+    * vector store, MV store), removed at JVM exit by [[graft.Scratch]]. */
+  private[graft] def newStoreDir(): String = graft.Scratch.dir("store")
 
   /** Deterministic train/valid/test split (80/10/10) by content-stable
     * hash of the document key: the split a training-data pipeline needs

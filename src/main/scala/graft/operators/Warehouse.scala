@@ -859,18 +859,9 @@ object Warehouse {
       .orderBy("c_mktsegment")
   }
 
-  /** One per-JVM root for the bucketed-layout tables, removed at exit so
-    * repeated verify/bench runs never leak table directories.
-    */
-  private lazy val bucketedRoot: String = {
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_bucketed/" +
-        java.util.UUID.randomUUID().toString)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      catch { case scala.util.control.NonFatal(_) => () }))
-    dir.toString
-  }
+  /** One per-JVM scratch dir for the bucketed-layout tables: written
+    * once, reused by every later query in the JVM. */
+  private lazy val bucketedRoot: String = graft.Scratch.dir("bucketed")
 
   /** Write orders and lineitem ONCE as co-bucketed tables: both hashed
     * into the same number of buckets on the join key, one file per

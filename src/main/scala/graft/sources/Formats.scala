@@ -17,12 +17,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Formats {
 
-  private def freshDir(kind: String): String = {
-    val d = s"${sys.props("java.io.tmpdir")}/graft_fmt_$kind/" +
-      java.util.UUID.randomUUID().toString.take(8)
-    d
-  }
-
   /** SCHEMA EVOLUTION read: two parquet generations of the events feed —
     * v1 without the `value` column, v2 with it — merged into one frame
     * via mergeSchema (v1 rows surface a null `value`), then a per-type
@@ -33,7 +27,7 @@ object Formats {
     */
   def schemaEvolutionCensus(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val dir = freshDir("schevo")
+    val dir = graft.Scratch.dir("fmt_schevo")
     val ev = events.select(col("event_id"), col("event_type"), col("value"))
     ev.filter(pmod(col("event_id"), lit(2)) === 0)
       .select("event_id", "event_type")
@@ -53,7 +47,7 @@ object Formats {
     */
   def csvRoundtrip(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val dir = freshDir("csv")
+    val dir = graft.Scratch.dir("fmt_csv")
     val out = events.select(
       col("event_id"), unix_micros(col("ts")).as("us"),
       col("user_id"), col("event_type"), col("value"))
@@ -79,7 +73,7 @@ object Formats {
     */
   def xmlRoundtrip(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val dir = freshDir("xml")
+    val dir = graft.Scratch.dir("fmt_xml")
     val out = events.select(
       col("event_id"), unix_micros(col("ts")).as("us"),
       col("user_id"), col("event_type"), col("value"))
@@ -101,7 +95,7 @@ object Formats {
     */
   def orcRoundtrip(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val dir = freshDir("orc")
+    val dir = graft.Scratch.dir("fmt_orc")
     events.select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .repartition(col("event_type"))

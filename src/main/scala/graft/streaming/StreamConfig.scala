@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamReader
 
@@ -111,13 +111,8 @@ object StreamConfig {
       case Some(s) => base.filter(col("shard_id") === s)
       case None => base
     }
-    val q = routed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamOps.landBatch(batch, cfg.outDir, batchId)
-      }
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.eachBatch(routed, cfg.checkpointDir) { (batch, batchId) =>
+      StreamOps.landBatch(batch, cfg.outDir, batchId)
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.Landing
 
@@ -78,6 +78,58 @@ object StreamOps {
     configureStateStore(spark)
     spark.readStream
   }
+
+  /** Prefix of every memory-sink table [[toMemory]] registers;
+    * [[graft.Run.release]] drops these views between queries. */
+  val MemorySinkPrefix = "graft_stream_"
+
+  /** The one stream drain: run `w` with the AvailableNow trigger (the
+    * reference's poll→land loop, consumer.py:282-314, over a bounded
+    * source) and return once it has drained the source.
+    */
+  private def drain(w: DataStreamWriter[Row]): Unit =
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Drain `df` into a memory sink in output `mode` and return the
+    * sink's table. */
+  private def toMemory(df: DataFrame, mode: String,
+                       checkpoint: Option[String] = None): DataFrame = {
+    val name = MemorySinkPrefix + UUID.randomUUID().toString.take(8)
+    val w = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    drain(w)
+    df.sparkSession.table(name)
+  }
+
+  /** Drain `df` through `f` per micro-batch, offsets committed to `ck`. */
+  private[streaming] def eachBatch(df: DataFrame, ck: String)(
+      f: (DataFrame, Long) => Unit): Unit =
+    drain(df.writeStream.foreachBatch(f).option("checkpointLocation", ck))
+
+  /** The idempotent `batch=N` store: each non-empty micro-batch's
+    * `perBatch` frame lands as one file under a deterministic batch=N
+    * directory with overwrite, so a crash-replayed batch replaces its own
+    * output instead of double-counting. Returns the store's reader; the
+    * store and its checkpoint live in a fresh [[graft.Scratch]] dir.
+    */
+  private def toBatchStore(df: DataFrame, kind: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val root = graft.Scratch.dir(kind)
+    eachBatch(df, s"$root/ck") { (batch, batchId) =>
+      if (!batch.isEmpty)
+        perBatch(batch).coalesce(1)
+          .write.mode("overwrite").parquet(s"$root/store/batch=$batchId")
+    }
+    df.sparkSession.read.parquet(s"$root/store")
+  }
+
+  /** The staged-range source: one staged file per micro-batch, so the
+    * file source replays [[stageRanges]]' ranges in mtime order. */
+  private def stagedStream(spark: SparkSession, schema: StructType,
+                           srcDir: String): DataFrame =
+    readStream(spark).schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
 
   /** Flat events schema as stored: ts = parquet TIMESTAMP(µs,
     * isAdjustedToUTC=false) = Spark TIMESTAMP_NTZ; [[withEnvelope]]
@@ -187,7 +239,6 @@ object StreamOps {
   def eventsStreamFromDir(spark: SparkSession, streamDir: String,
                           nShards: Int = 8,
                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val reader = readStream(spark).schema(rawSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     withEnvelope(reader.parquet(streamDir), nShards)
@@ -246,33 +297,27 @@ object StreamOps {
     landStreamFromDir(spark, stageStreamDir(sfDir), outDir, checkpointDir)
 
   def landStreamFromDir(spark: SparkSession, streamDir: String, outDir: String,
-                        checkpointDir: String): Unit = {
-    val q = dedupedEvents(spark, streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landBatch(batch, outDir, batchId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                        checkpointDir: String): Unit =
+    eachBatch(dedupedEvents(spark, streamDir), checkpointDir) {
+      (batch, batchId) => landBatch(batch, outDir, batchId)
+    }
 
   /** Oracle-facing form of [[landStream]]: run the full streaming pipeline
-    * into fresh temp dirs, then aggregate the landed files per
+    * into a fresh scratch dir, then aggregate the landed files per
     * (y,m,d,h) — same contract as the batch q_land_partitioned.
     */
   def streamLandCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val outDir = s"$tmp/graft_stream_land/$runId"
-    val ckDir = s"$tmp/graft_stream_ck/$runId"
-    landStream(spark, sfDir, outDir, ckDir)
+    val root = graft.Scratch.dir("stream_land")
+    landStream(spark, sfDir, s"$root/out", s"$root/ck")
+    landedCounts(spark, s"$root/out")
+  }
+
+  /** Per-(y,m,d,h) event counts of a landed JSON layout. */
+  private def landedCounts(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(landedDataSchema).json(outDir)
       .groupBy("y", "m", "d", "h")
       .agg(count(lit(1)).as("n_events"))
       .orderBy("y", "m", "d", "h")
-  }
 
   /** The engine event stream read through the [[graft.sources.GraftShards]]
     * DSv2 source instead of the parquet file stand-in — S1 as a real
@@ -321,24 +366,13 @@ object StreamOps {
     */
   def streamLandCountsShards(spark: SparkSession, sfDir: String): DataFrame = {
     val shardDir = graft.sources.GraftShards.stageShardDir(spark, sfDir)
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val outDir = s"$tmp/graft_stream_land_dsv2/$runId"
-    val ckDir = s"$tmp/graft_stream_ck_dsv2/$runId"
-    val q = dedupEventsFrame(
-        shardsEventStream(spark, shardDir, batchSize = Some(10000)))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        landBatch(batch, outDir, batchId)
-      }
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.schema(landedDataSchema).json(outDir)
-      .groupBy("y", "m", "d", "h")
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy("y", "m", "d", "h")
+    val root = graft.Scratch.dir("stream_land_dsv2")
+    eachBatch(dedupEventsFrame(
+        shardsEventStream(spark, shardDir, batchSize = Some(10000))),
+      s"$root/ck") { (batch, batchId) =>
+      landBatch(batch, s"$root/out", batchId)
+    }
+    landedCounts(spark, s"$root/out")
   }
 
   /** One micro-batch of the MERGE-shaped LANDING UPSERT: late-corrected
@@ -432,8 +466,7 @@ object StreamOps {
     */
   def streamLandUpsert(spark: SparkSession, sfDir: String,
                        nBatches: Int = 3): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val baseDir = s"${sys.props("java.io.tmpdir")}/graft_upsert/$runId/base"
+    val baseDir = s"${graft.Scratch.dir("upsert")}/base"
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
               col("value"), lit(0).as("corrected"))
@@ -444,17 +477,9 @@ object StreamOps {
       .withColumn("value", col("value") + lit(1000.0))
       .withColumn("corrected", lit(1))
     val root = stageRanges(corrections, "event_id", nBatches)
-    val q = readStream(spark).schema(corrections.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, baseDir)
-      }
-      .option("checkpointLocation", s"$root/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runStagedBatches(spark, corrections.schema, s"$root/src", s"$root/ck") {
+      (batch, _) => upsertBatch(batch, baseDir)
+    }
     spark.read.parquet(baseDir)
       .groupBy("y", "m", "d")
       .agg(count(lit(1)).as("n_events"),
@@ -485,25 +510,17 @@ object StreamOps {
     * for slowly-refreshed dimension tables next to a hot stream.
     */
   def streamSegmentRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val table = s"graft_stream_seg_${UUID.randomUUID().toString.take(8)}"
     // static dim derived deterministically from the warehouse so the
     // oracle can rebuild it: every user in a segment by id
     val profiles = graft.Tables.events(spark, sfDir)
       .select(col("user_id")).distinct()
       .withColumn("segment", pmod(col("user_id"), lit(5)))
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .join(broadcast(profiles), "user_id")
       .groupBy("segment")
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table).orderBy("segment")
+           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete").orderBy("segment")
   }
 
   /** Streaming tumbling event-time window aggregation (T8) with a
@@ -512,20 +529,12 @@ object StreamOps {
     */
   def streamTumblingCounts(spark: SparkSession, sfDir: String,
                            hours: Int): DataFrame = {
-    val table = s"graft_stream_win_${UUID.randomUUID().toString.take(8)}"
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), s"$hours hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select(unix_seconds(col("w.start")).as("window_start_s"),
               col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("window_start_s", "event_type")
@@ -540,21 +549,13 @@ object StreamOps {
     */
   def streamSlidingCounts(spark: SparkSession, sfDir: String,
                           widthHours: Int, slideHours: Int): DataFrame = {
-    val table = s"graft_stream_slide_${UUID.randomUUID().toString.take(8)}"
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), s"$widthHours hours", s"$slideHours hours").as("w"),
                col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select(unix_seconds(col("w.start")).as("window_start_s"),
               col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("window_start_s", "event_type")
@@ -592,20 +593,12 @@ object StreamOps {
   def streamSlidingDistinct(spark: SparkSession, sfDir: String,
                             widthHours: Int, slideHours: Int,
                             rsd: Double = 0.02): DataFrame = {
-    val table = s"graft_stream_sdist_${UUID.randomUUID().toString.take(8)}"
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), s"$widthHours hours", s"$slideHours hours").as("w"))
       .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"),
-           count(lit(1)).as("n_events"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+           count(lit(1)).as("n_events")),
+      "complete")
       .select(unix_seconds(col("w.start")).as("window_start_s"),
               col("n_users_approx"), col("n_events"))
       .orderBy("window_start_s")
@@ -665,7 +658,6 @@ object StreamOps {
     * forever. Append mode: each matched pair is emitted exactly once.
     */
   def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val table = s"graft_stream_ssj_${UUID.randomUUID().toString.take(8)}"
     val purchases = eventsStream(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
@@ -677,17 +669,10 @@ object StreamOps {
               col("ts").as("v_ts"))
       .withWatermark("v_ts", "2 hours")
     atStateWidth(spark, sfDir) {
-      val q = purchases.join(views,
-          expr("p_user = v_user AND v_ts >= p_ts - interval 1 hour AND v_ts <= p_ts"))
-        .writeStream
-        .format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      toMemory(purchases.join(views,
+          expr("p_user = v_user AND v_ts >= p_ts - interval 1 hour AND v_ts <= p_ts")),
+        "append")
     }
-    spark.table(table)
       .select(col("p_id"), col("v_id"),
               (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("lag_us"))
       .orderBy("p_id", "v_id")
@@ -729,54 +714,23 @@ object StreamOps {
   private val ssjoStaged =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** One per-JVM parent for the staged outer-join dirs, removed at exit —
-    * same discipline as Events.zorderRoot / Warehouse.bucketedRoot, so
-    * repeated verify/bench runs never leak staged event copies.
-    */
-  private lazy val ssjoRoot: String = {
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_ssjo/" +
-        UUID.randomUUID().toString)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      catch { case scala.util.control.NonFatal(_) => () }))
-    dir.toString
-  }
-
   private def stageOuterJoinDir(spark: SparkSession, sfDir: String): String =
     ssjoStaged.computeIfAbsent(sfDir, { _ =>
-      import java.nio.file.{Files, Paths}
-      val runId = UUID.randomUUID().toString.take(8)
-      val root = s"$ssjoRoot/$runId"
-      Files.createDirectories(Paths.get(root))
+      val root = graft.Scratch.dir("ssjo")
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      def stageFile(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stagedir = s"$root/stage_$name"
-        df.coalesce(1).write.parquet(stagedir)
-        val listing = Files.list(Paths.get(stagedir))
-        val part =
-          try listing.toArray.map(_.toString).find(_.endsWith(".parquet")).get
-          finally listing.close()
-        val target = Paths.get(s"$root/$name.parquet")
-        Files.move(Paths.get(part), target)
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedir))
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(mtime))
-      }
       def sentinels(days: Int): DataFrame = raw.agg(max(col("ts")).as("m"))
         .select(explode(array(lit("view"), lit("purchase"))).as("event_type"),
                 expr(s"timestampadd(DAY, $days, m)").as("ts"))
         .select(lit(-1L).as("event_id"), col("ts"), lit(-1L).as("user_id"),
                 col("event_type"), lit(0.0).as("value"), lit("{}").as("props"))
-      stageFile(raw, "range0", 1000000000000L)
-      stageFile(sentinels(30), "range1", 1000000060000L)
-      stageFile(sentinels(60), "range2", 1000000120000L)
+      stageRange(raw, root, 0)
+      stageRange(sentinels(30), root, 1)
+      stageRange(sentinels(60), root, 2)
       root
     })
 
   def streamIntervalJoinOuter(spark: SparkSession, sfDir: String,
                               joinType: String = "leftOuter"): DataFrame = {
-    val table = s"graft_stream_ssjo_${UUID.randomUUID().toString.take(8)}"
     val root = stageOuterJoinDir(spark, sfDir)
 
     val purchases = eventsStreamFromDir(spark, root, maxFilesPerTrigger = Some(1))
@@ -789,21 +743,15 @@ object StreamOps {
       .select(col("event_id").as("v_id"), col("user_id").as("v_user"),
               col("ts").as("v_ts"))
       .withWatermark("v_ts", "2 hours")
-    atStateWidth(spark, sfDir) {
-      val q = purchases.join(views,
+    val joined = atStateWidth(spark, sfDir) {
+      toMemory(purchases.join(views,
           expr("p_user = v_user AND v_ts >= p_ts - interval 1 hour AND v_ts <= p_ts"),
-          joinType)
-        .writeStream
-        .format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          joinType),
+        "append")
     }
     // sentinels (user −1 on either side) out; unmatched sides surface as
     // −1 ids. fullOuter adds the view-only rows leftOuter suppresses.
-    spark.table(table)
+    joined
       .filter(coalesce(col("p_user"), lit(0L)) >= 0L &&
               coalesce(col("v_user"), lit(0L)) >= 0L)
       .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
@@ -830,14 +778,13 @@ object StreamOps {
     * survives restarts like any other stateful operator.
     */
   def streamUserState(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import org.apache.spark.sql.{Encoder, Encoders}
     implicit val ueEnc: Encoder[UserEvent] = Encoders.product[UserEvent]
     implicit val usEnc: Encoder[UserState] = Encoders.product[UserState]
     implicit val outEnc: Encoder[UserSummary] = Encoders.product[UserSummary]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
 
-    val table = s"graft_stream_state_${UUID.randomUUID().toString.take(8)}"
     val events = eventsStream(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
@@ -854,19 +801,12 @@ object StreamOps {
       UserSummary(user, s.n_events, s.sum_cents, s.last_us)
     }
 
-    val q = events
+    val t = toMemory(events
       .groupByKey(_.user_id)(keyEnc)
       .mapGroupsWithState[UserState, UserSummary](GroupStateTimeout.NoTimeout())(update)
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .toDF(), "update")
     // Update-mode memory sink appends one row per key per batch; the final
     // state per user is the row from the LAST batch that touched the key.
-    val t = spark.table(table)
     t.groupBy("user_id")
       .agg(max(struct(col("n_events"), col("sum_cents"), col("last_us"))).as("s"))
       .select(col("user_id"), col("s.n_events"), col("s.sum_cents"), col("s.last_us"))
@@ -891,7 +831,6 @@ object StreamOps {
     implicit val outEnc: Encoder[TypeCount] = Encoders.product[TypeCount]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
 
-    val table = s"graft_stream_flat_${UUID.randomUUID().toString.take(8)}"
     val events = eventsStream(spark, sfDir)
       .select(col("user_id"), col("event_type"))
       .as[TypedEvent](inEnc)
@@ -908,18 +847,11 @@ object StreamOps {
       touched.iterator.map(t => TypeCount(user, t, counts(t)))
     }
 
-    val q = events
+    toMemory(events
       .groupByKey(_.user_id)(keyEnc)
       .flatMapGroupsWithState[TypeCounts, TypeCount](
         OutputMode.Update(), GroupStateTimeout.NoTimeout())(update)
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+      .toDF(), "update")
       .groupBy("user_id", "event_type")
       .agg(max(col("n_events")).as("n_events"))
       .orderBy("user_id", "event_type")
@@ -1010,17 +942,8 @@ object StreamOps {
     */
   private def runStagedBatches(spark: SparkSession, schema: StructType,
                                srcDir: String, ckDir: String)(
-                               f: (DataFrame, Long) => Unit): Unit = {
-    val q = readStream(spark).schema(schema)
-      .option("maxFilesPerTrigger", 1) // one staged file per micro-batch
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(f)
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                               f: (DataFrame, Long) => Unit): Unit =
+    eachBatch(stagedStream(spark, schema, srcDir), ckDir)(f)
 
   /** STREAMING CHUNKING: documents arrive in micro-batches and are
     * chunked statelessly at ingest — the stream side of the RAG-prep
@@ -1073,71 +996,42 @@ object StreamOps {
 
   /** Generic form: stage ANY keyed table as contiguous id ranges. */
   def stageRanges(df: DataFrame, idCol: String, nBatches: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val runId = UUID.randomUUID().toString.take(8)
-    val parent = s"${sys.props("java.io.tmpdir")}/graft_docstream"
-    // hygiene: every run leaves its staging root behind (the caller's
-    // frame serves lazily FROM the artifacts, so the run itself can
-    // never delete it) — on a long-lived host these accumulate without
-    // bound (measured: 1063 roots / 8.5 GB after 17 bench+verify
-    // rounds). Sweep siblings older than 2 h at stage time: far beyond
-    // any single bench/verify run's lifetime, so concurrent processes
-    // are never touched.
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    val p = Paths.get(parent)
-    if (Files.isDirectory(p)) {
-      val listing = Files.list(p)
-      try listing.toArray.map(_.asInstanceOf[java.nio.file.Path]).foreach { d =>
-        if (Files.getLastModifiedTime(d).toMillis < cutoff)
-          try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-          catch { case scala.util.control.NonFatal(_) => () }
-      } finally listing.close()
-    }
-    val root = s"$parent/$runId"
-    val srcDir = s"$root/src"
-    Files.createDirectories(Paths.get(srcDir))
+    val root = graft.Scratch.dir("staged")
     val bounds = df.agg(min(col(idCol)), max(col(idCol))).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val span = (hi - lo + nBatches) / nBatches // ceil so ranges cover hi
     (0 until nBatches).foreach { i =>
-      val stagedir = s"$srcDir/stage$i"
-      df.filter(col(idCol) >= lo + i * span &&
-                col(idCol) < lo + (i + 1) * span)
-        .coalesce(1).write.parquet(stagedir)
-      val listing = Files.list(Paths.get(stagedir))
-      val part =
-        try listing.toArray.map(_.toString).find(_.endsWith(".parquet")).get
-        finally listing.close()
-      val target = Paths.get(s"$srcDir/range$i.parquet")
-      Files.move(Paths.get(part), target)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedir))
-      // strictly increasing mtimes pin the source's replay order
-      Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      stageRange(df.filter(col(idCol) >= lo + i * span &&
+                           col(idCol) < lo + (i + 1) * span), s"$root/src", i)
     }
     root
   }
 
-  /** Stage one more micro-batch AFTER a [[stageRanges]] run: written as
-    * `range<idx>.parquet` with the next mtime in the sequence, so the
-    * file source replays it LAST — the staging device every
-    * re-delivery / revision scenario shares.
+  /** Stage `df` as ONE parquet file `<srcDir>/range<i>.parquet` whose
+    * mtime is the i-th in a strictly increasing sequence — the order the
+    * file source replays staged files in.
     */
-  private def stageLateBatch(df: DataFrame, root: String, idx: Int): Unit = {
+  private def stageRange(df: DataFrame, srcDir: String, i: Int): Unit = {
     import java.nio.file.{Files, Paths}
-    val stagedir = s"$root/latestage"
+    val stagedir = s"$srcDir/stage$i"
     df.coalesce(1).write.parquet(stagedir)
     val listing = Files.list(Paths.get(stagedir))
     val part =
       try listing.toArray.map(_.toString).find(_.endsWith(".parquet")).get
       finally listing.close()
-    val target = Paths.get(s"$root/src/range$idx.parquet")
+    val target = Paths.get(s"$srcDir/range$i.parquet")
     Files.move(Paths.get(part), target)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedir))
     Files.setLastModifiedTime(target,
-      java.nio.file.attribute.FileTime.fromMillis(
-        1000000000000L + idx * 60000L))
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
   }
+
+  /** Stage one more micro-batch AFTER a [[stageRanges]] run, as range
+    * `idx`, so the file source replays it LAST — the staging device
+    * every re-delivery / revision scenario shares.
+    */
+  private def stageLateBatch(df: DataFrame, root: String, idx: Int): Unit =
+    stageRange(df, s"$root/src", idx)
 
   /** Oracle-facing form: stage the documents table as contiguous
     * doc_id-range batches (range order ⇒ the global survivor set is the
@@ -1311,18 +1205,15 @@ object StreamOps {
     */
   def streamQuarantine(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Events
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val goodDir = s"$tmp/graft_quarantine/$runId/good"
-    val badDir = s"$tmp/graft_quarantine/$runId/bad"
-    val ckDir = s"$tmp/graft_quarantine/$runId/ck"
-    val q = eventsStream(spark, sfDir)
+    val root = graft.Scratch.dir("quarantine")
+    val goodDir = s"$root/good"
+    val badDir = s"$root/bad"
+    eachBatch(eventsStream(spark, sfDir)
       .withColumn("raw",
         when(pmod(col("event_id"), lit(7)) === 0,
           regexp_replace(col("props"), "\\{", "<")).otherwise(col("props")))
-      .withColumn("parsed", from_json(col("raw"), Events.propsSchema))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .withColumn("parsed", from_json(col("raw"), Events.propsSchema)),
+      s"$root/ck") { (batch, batchId) =>
         batch.persist()
         try {
           // PERMISSIVE from_json: malformed input -> all-null FIELDS
@@ -1336,11 +1227,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$badDir/batch=$batchId")
           ()
         } finally batch.unpersist(blocking = false)
-      }
-      .option("checkpointLocation", ckDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     // explicit read-back schemas: a batch with zero rows on one side
     // writes no part files, and schema inference would fail there
     val goodSchema = StructType(Seq(StructField("event_id", LongType),
@@ -1379,22 +1266,13 @@ object StreamOps {
     val root = stageRanges(emb, "vec_id", nBatches)
     val cb = Similarity.coarseCodebook(emb).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
-    val table = s"graft_stream_ivf_${UUID.randomUUID().toString.take(8)}"
-    val q = readStream(spark).schema(emb.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
+    toMemory(stagedStream(spark, emb.schema, s"$root/src")
       .withColumn("assigned", Similarity.assignByLiteralCodebook(
         graft.functions.VectorMath.asDouble(col("embedding")), cb))
       .groupBy("label", "assigned")
-      .agg(count(lit(1)).as("n_vectors"))
-      .writeStream
-      .format("memory").queryName(table)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$root/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table).orderBy("label", "assigned")
+      .agg(count(lit(1)).as("n_vectors")),
+      "complete", Some(s"$root/ck"))
+      .orderBy("label", "assigned")
   }
 
   /** STREAMING RAG INGEST: documents arrive in micro-batches and flow
@@ -1423,10 +1301,7 @@ object StreamOps {
         Similarity.chunkEmbeddings(docs, size, stride, dims, nLabels))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
-    val table = s"graft_stream_cemb_${UUID.randomUUID().toString.take(8)}"
-    val q = readStream(spark).schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
+    toMemory(stagedStream(spark, docSchema, s"$root/src")
       .transform(b => Similarity.chunkEmbeddingsFrom(
         graft.operators.TextAnalysis.chunkDocumentsUnordered(b, size, stride)
           .withColumn("vec_id", col("doc_id") * lit(1000000L) + col("chunk_id")),
@@ -1434,15 +1309,9 @@ object StreamOps {
       .withColumn("assigned", Similarity.assignByLiteralCodebook(
         graft.functions.VectorMath.asDouble(col("embedding")), cb))
       .groupBy("label", "assigned")
-      .agg(count(lit(1)).as("n_chunks"))
-      .writeStream
-      .format("memory").queryName(table)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$root/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table).orderBy("label", "assigned")
+      .agg(count(lit(1)).as("n_chunks")),
+      "complete", Some(s"$root/ck"))
+      .orderBy("label", "assigned")
   }
 
   /** STREAMING SQ8 INGEST: vectors are int8-quantized as they arrive —
@@ -1488,23 +1357,14 @@ object StreamOps {
                      probes: Seq[String], seed: Long = 42L): DataFrame = {
     import graft.functions.CountMin
     val root = stageDocRanges(spark, sfDir, 3)
-    val table = s"graft_stream_cms_${UUID.randomUUID().toString.take(8)}"
     val cms = org.apache.spark.sql.functions.udaf(
       new CountMin.CMSAgg(seed), org.apache.spark.sql.Encoders.scalaLong)
-    val q = readStream(spark).schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
+    val sketch = toMemory(stagedStream(spark, docSchema, s"$root/src")
       .select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("term"))
       .select(graft.operators.NearDup.md5Hash60(col("term")).as("hv"))
-      .agg(cms(col("hv")).as("sk"))
-      .writeStream
-      .format("memory").queryName(table)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$root/ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = spark.table(table).head().getSeq[Long](0)
+      .agg(cms(col("hv")).as("sk")),
+      "complete", Some(s"$root/ck"))
+      .head().getSeq[Long](0)
     // exact probe counts from the same corpus (batch side, as in the
     // batch audit — the probe list is tiny)
     val exact: Map[String, Long] = graft.Tables.documents(spark, sfDir)
@@ -1538,28 +1398,13 @@ object StreamOps {
     * retention window of batch dirs; the scorer is indifferent.
     */
   def streamAnomalyMad(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_anom/$runId/store"
-    val ck = s"$tmp/graft_stream_anom/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Landing.withTimeBuckets(batch, col("ts"))
-            .groupBy("event_type", "y", "m", "d", "h")
-            .agg(count(lit(1)).as("n_events"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val merged = spark.read.parquet(store)
-      .groupBy("event_type", "y", "m", "d", "h")
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_anom") { batch =>
+      graft.operators.Landing.withTimeBuckets(batch, col("ts"))
+        .groupBy("event_type", "y", "m", "d", "h")
+        .agg(count(lit(1)).as("n_events"))
+    }
+    val merged = store.groupBy("event_type", "y", "m", "d", "h")
       .agg(sum(col("n_events")).as("n_events"))
     graft.operators.Events.anomalyMadFromCounts(merged)
   }
@@ -1595,28 +1440,12 @@ object StreamOps {
     * per-batch report), corpus totals one additive agg away.
     */
   def streamPiiCensus(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_pii/$runId/store"
-    val ck = s"$tmp/graft_stream_pii/$runId/ck"
     val root = stageLangDocs(spark, sfDir, 3)
-    val q = readStream(spark).schema(langDocSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.TextAnalysis.piiRedactCensus(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(store).groupBy("lang")
+    val store = toBatchStore(stagedStream(spark, langDocSchema, s"$root/src"),
+                             "stream_pii") { batch =>
+      graft.operators.TextAnalysis.piiRedactCensus(batch)
+    }
+    store.groupBy("lang")
       .agg(sum("n_docs").as("n_docs"),
         sum("n_docs_pii").as("n_docs_pii"),
         sum("n_emails").as("n_emails"),
@@ -1643,30 +1472,14 @@ object StreamOps {
     */
   def streamBottomK(spark: SparkSession, sfDir: String,
                     k: Int = 50): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_bottomk/$runId/store"
-    val ck = s"$tmp/graft_stream_bottomk/$runId/ck"
     val root = stageLangDocs(spark, sfDir, 3)
-    val q = readStream(spark).schema(langDocSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.TextAnalysis.bottomKSample(batch, k)
-            .select("lang", "doc_id", "h")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(stagedStream(spark, langDocSchema, s"$root/src"),
+                             "stream_bottomk") { batch =>
+      graft.operators.TextAnalysis.bottomKSample(batch, k)
+        .select("lang", "doc_id", "h")
+    }
     graft.operators.TextAnalysis.bottomKFrom(
-      spark.read.parquet(store).dropDuplicates("lang", "doc_id"), k)
+      store.dropDuplicates("lang", "doc_id"), k)
   }
 
   /** STREAMING DRIFT MONITOR (q_stream_drift) — the distribution-shift
@@ -1689,10 +1502,6 @@ object StreamOps {
     * batch=N dirs), corpus-level KL/JS one additive merge away.
     */
   def streamDriftMonitor(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_drift/$runId/store"
-    val ck = s"$tmp/graft_stream_drift/$runId/ck"
     val docs = graft.Tables.documents(spark, sfDir)
     // the incoming snapshot (the q_dist_shift B-side laws) is what streams
     val incoming = docs.filter(pmod(col("doc_id"), lit(11L)) =!= 0)
@@ -1701,24 +1510,11 @@ object StreamOps {
           concat(col("text"), lit(" rev2"))).otherwise(col("text")).as("text"),
         col("lang"))
     val root = stageRanges(incoming, "doc_id", 3)
-    val q = readStream(spark).schema(langDocSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Pipeline.tfCensus(batch, "tfb")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val tfb = spark.read.parquet(store)
-      .groupBy("lang", "t").agg(sum("tfb").as("tfb"))
+    val store = toBatchStore(stagedStream(spark, langDocSchema, s"$root/src"),
+                             "stream_drift") { batch =>
+      graft.operators.Pipeline.tfCensus(batch, "tfb")
+    }
+    val tfb = store.groupBy("lang", "t").agg(sum("tfb").as("tfb"))
     val reference = docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0)
       .select(col("doc_id"), col("lang"), col("text"))
     graft.operators.Pipeline.distShiftFromTf(
@@ -1738,27 +1534,12 @@ object StreamOps {
     * ingest without rescanning history.
     */
   def streamForecast(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_fcst/$runId/store"
-    val ck = s"$tmp/graft_stream_fcst/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.hourlyTypeCounts(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_fcst") { batch =>
+      graft.operators.Events.hourlyTypeCounts(batch)
+    }
     graft.operators.Events.forecastFromHourly(
-      spark.read.parquet(store)
-        .groupBy("event_type", "hr").agg(sum(col("x")).as("x")))
+      store.groupBy("event_type", "hr").agg(sum(col("x")).as("x")))
   }
 
   /** STREAMING CONFORMAL CALIBRATION (q_stream_conformal) — the
@@ -1773,27 +1554,12 @@ object StreamOps {
     * (type, hour) count rows, never event rows.
     */
   def streamConformal(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_conf/$runId/store"
-    val ck = s"$tmp/graft_stream_conf/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.hourlyTypeCounts(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_conf") { batch =>
+      graft.operators.Events.hourlyTypeCounts(batch)
+    }
     graft.operators.Events.conformalFromHourly(
-      spark.read.parquet(store)
-        .groupBy("event_type", "hr").agg(sum(col("x")).as("x")))
+      store.groupBy("event_type", "hr").agg(sum(col("x")).as("x")))
   }
 
   /** STREAMING DP COUNT RELEASE (q_stream_dp) — the private histogram
@@ -1813,30 +1579,15 @@ object StreamOps {
     */
   def streamDpRelease(spark: SparkSession, sfDir: String,
                       epsilon: Double = 1.0): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_dp/$runId/store"
-    val ck = s"$tmp/graft_stream_dp/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch
-            .select(col("event_type"),
-              date_format(col("ts"), "yyyy-MM-dd").as("day"))
-            .groupBy("event_type", "day").agg(count(lit(1)).as("n_true"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_dp") { batch =>
+      batch
+        .select(col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd").as("day"))
+        .groupBy("event_type", "day").agg(count(lit(1)).as("n_true"))
+    }
     graft.operators.Pipeline.dpReleaseFromCells(
-      spark.read.parquet(store)
-        .groupBy("event_type", "day")
+      store.groupBy("event_type", "day")
         .agg(sum(col("n_true")).as("n_true")),
       epsilon)
   }
@@ -1866,27 +1617,12 @@ object StreamOps {
                         binW: Double = 4.0, nBins: Int = 128,
                         ps: Seq[Double] = Seq(0.5, 0.95, 0.99))
       : DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_pct/$runId/store"
-    val ck = s"$tmp/graft_stream_pct/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.valueBins(batch, binW, nBins)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_pct") { batch =>
+      graft.operators.Events.valueBins(batch, binW, nBins)
+    }
     graft.operators.Events.percentilesFromBins(
-      spark.read.parquet(store)
-        .groupBy("event_type", "bin").agg(sum(col("n")).as("n")),
+      store.groupBy("event_type", "bin").agg(sum(col("n")).as("n")),
       binW, ps)
   }
 
@@ -1904,30 +1640,15 @@ object StreamOps {
   def streamSkewMonitor(spark: SparkSession, sfDir: String,
                         keys: Seq[String] = Seq("event_type", "user_id"))
       : DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_skew/$runId/store"
-    val ck = s"$tmp/graft_stream_skew/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          keys.map { c =>
-            batch.groupBy(col(c).cast("string").as("k"))
-              .agg(count(lit(1)).as("n"))
-              .select(lit(c).as("key_col"), col("k"), col("n"))
-          }.reduce(_ unionByName _)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val merged = spark.read.parquet(store)
-      .groupBy("key_col", "k").agg(sum(col("n")).as("n"))
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_skew") { batch =>
+      keys.map { c =>
+        batch.groupBy(col(c).cast("string").as("k"))
+          .agg(count(lit(1)).as("n"))
+          .select(lit(c).as("key_col"), col("k"), col("n"))
+      }.reduce(_ unionByName _)
+    }
+    val merged = store.groupBy("key_col", "k").agg(sum(col("n")).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .transform(graft.CacheRegistry.track)
     keys.map { c =>
@@ -1955,26 +1676,12 @@ object StreamOps {
     * fact history — and serving is a projection of the merged view.
     */
   def streamMv(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_mv/$runId/store"
-    val ck = s"$tmp/graft_stream_mv/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.mvPartial(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_mv") { batch =>
+      graft.operators.Events.mvPartial(batch)
+    }
     graft.operators.Events.mvServe(
-      graft.operators.Events.mvMergeRows(spark.read.parquet(store)))
+      graft.operators.Events.mvMergeRows(store))
   }
 
   /** STREAMING RETRACT-STREAM MV (q_stream_mv_retract) — the CDC form
@@ -1990,29 +1697,15 @@ object StreamOps {
     * overwrite); state is group-cardinality signed partials.
     */
   def streamMvRetract(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_mvr/$runId/store"
-    val ck = s"$tmp/graft_stream_mvr/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.retractDeltas(batch)
-            .groupBy("event_type", "day")
-            .agg(sum(col("dn")).as("n_events"),
-              sum(col("dv")).cast("decimal(18,2)").as("sum_value"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_mvr") { batch =>
+      graft.operators.Events.retractDeltas(batch)
+        .groupBy("event_type", "day")
+        .agg(sum(col("dn")).as("n_events"),
+          sum(col("dv")).cast("decimal(18,2)").as("sum_value"))
+    }
     graft.operators.Events.mvServe(
-      graft.operators.Events.mvMergeRows(spark.read.parquet(store)))
+      graft.operators.Events.mvMergeRows(store))
   }
 
   /** STREAMING A/B MONITOR (q_stream_ab) — the experiment read-out kept
@@ -2033,27 +1726,12 @@ object StreamOps {
     * history; the statistic math is a 1-row reduction.
     */
   def streamAb(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_ab/$runId/store"
-    val ck = s"$tmp/graft_stream_ab/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Experiment.abUserPartial(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_ab") { batch =>
+      graft.operators.Experiment.abUserPartial(batch)
+    }
     graft.operators.Experiment.abMetricsFromUsers(
-      graft.operators.Experiment.abUsersFromPartials(
-        spark.read.parquet(store)))
+      graft.operators.Experiment.abUsersFromPartials(store))
   }
 
   /** STREAMING COHORT LTV (q_stream_ltv) — the payback dashboard kept
@@ -2067,27 +1745,12 @@ object StreamOps {
     * touched-user-day rows, never the event history.
     */
   def streamLtv(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_ltv/$runId/store"
-    val ck = s"$tmp/graft_stream_ltv/$runId/ck"
-    val q = dedupedEvents(spark, stageStreamDir(sfDir))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Events.ltvUserDays(batch)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(dedupedEvents(spark, stageStreamDir(sfDir)),
+                             "stream_ltv") { batch =>
+      graft.operators.Events.ltvUserDays(batch)
+    }
     graft.operators.Events.ltvFromUserDays(
-      spark.read.parquet(store)
-        .groupBy("user_id", "day")
+      store.groupBy("user_id", "day")
         .agg(sum(col("n_events")).as("n_events"),
           sum(col("revenue")).cast("decimal(18,2)").as("revenue")))
   }
@@ -2111,10 +1774,8 @@ object StreamOps {
   def streamForget(spark: SparkSession, sfDir: String,
                    victimMod: Long = 97L, nBuckets: Int = 16,
                    nBatches: Int = 3): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val baseDir = s"$tmp/graft_stream_forget/$runId/base"
-    val ck = s"$tmp/graft_stream_forget/$runId/ck"
+    val run = graft.Scratch.dir("stream_forget")
+    val baseDir = s"$run/base"
     val ev = graft.Tables.events(spark, sfDir)
     graft.operators.Landing.landUserBucketed(ev, nBuckets, baseDir)
     val before = graft.CacheRegistry.trackCheckpoint(
@@ -2124,20 +1785,12 @@ object StreamOps {
     val victims = ev.filter(pmod(col("user_id"), lit(victimMod)) === 0)
       .select("user_id").distinct()
     val root = stageRanges(victims, "user_id", nBatches)
-    val q = readStream(spark)
-      .schema(StructType(Seq(StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Landing.eraseVictims(spark, baseDir, batch, nBuckets)
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    eachBatch(stagedStream(spark,
+        StructType(Seq(StructField("user_id", LongType))), s"$root/src"),
+      s"$run/ck") { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.operators.Landing.eraseVictims(spark, baseDir, batch, nBuckets)
+    }
     graft.operators.Landing.forgetCensus(spark, baseDir, before)
   }
 
@@ -2151,35 +1804,18 @@ object StreamOps {
     * oracle shared verbatim. Per-batch state is |langs|·|sources| rows.
     */
   def streamChi2(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_chi2/$runId/store"
-    val ck = s"$tmp/graft_stream_chi2/$runId/ck"
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("lang", StringType),
       StructField("source", StringType)))
     val root = stageRanges(graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source"), "doc_id", 3)
-    val q = readStream(spark).schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.groupBy("lang", "source").agg(count(lit(1)).as("n_obs"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(stagedStream(spark, schema, s"$root/src"),
+                             "stream_chi2") { batch =>
+      batch.groupBy("lang", "source").agg(count(lit(1)).as("n_obs"))
+    }
     graft.operators.Pipeline.chi2FromCounts(
-      spark.read.parquet(store)
-        .groupBy("lang", "source").agg(sum(col("n_obs")).as("n_obs")))
+      store.groupBy("lang", "source").agg(sum(col("n_obs")).as("n_obs")))
   }
 
   /** STREAMING K-ANONYMITY monitor (q_stream_kanon) — the
@@ -2195,35 +1831,18 @@ object StreamOps {
     * class-cardinality, never row-cardinality.
     */
   def streamKanon(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_kanon/$runId/store"
-    val ck = s"$tmp/graft_stream_kanon/$runId/ck"
     val cust = graft.Tables.customer(spark, sfDir)
     val root = stageRanges(cust, "c_custkey", 3)
-    val q = readStream(spark).schema(cust.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.select(col("c_nationkey"), col("c_mktsegment"),
-              floor(col("c_acctbal") / lit(1000.0)).cast("long")
-                .as("bal_bucket"))
-            .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
-            .agg(count(lit(1)).as("k"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Pipeline.kanonFromClasses(
-      spark.read.parquet(store)
+    val store = toBatchStore(stagedStream(spark, cust.schema, s"$root/src"),
+                             "stream_kanon") { batch =>
+      batch.select(col("c_nationkey"), col("c_mktsegment"),
+          floor(col("c_acctbal") / lit(1000.0)).cast("long")
+            .as("bal_bucket"))
         .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
+        .agg(count(lit(1)).as("k"))
+    }
+    graft.operators.Pipeline.kanonFromClasses(
+      store.groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
         .agg(sum(col("k")).as("k")))
   }
 
@@ -2245,37 +1864,21 @@ object StreamOps {
     * per-ingest violation report.
     */
   def streamRiMonitor(spark: SparkSession, sfDir: String): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    val store = s"$tmp/graft_stream_ri/$runId/store"
-    val ck = s"$tmp/graft_stream_ri/$runId/ck"
     val ev = graft.Tables.events(spark, sfDir).select("event_id", "user_id")
     val parentKeys = graft.Tables.customer(spark, sfDir)
       .select(col("c_custkey").cast("long").as("_pk"))
     val root = stageRanges(ev, "event_id", 3)
-    val q = readStream(spark).schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.select(col("user_id").cast("long").as("_fk"))
-            .groupBy("_fk").agg(count(lit(1)).as("n_rows"))
-            .join(broadcast(parentKeys), col("_fk") === col("_pk"), "left")
-            .select(col("_fk"), col("n_rows"),
-              when(col("_pk").isNull, col("n_rows")).otherwise(lit(0L))
-                .as("n_orphan_rows"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$store/batch=$batchId")
-          ()
-        }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val store = toBatchStore(stagedStream(spark, ev.schema, s"$root/src"),
+                             "stream_ri") { batch =>
+      batch.select(col("user_id").cast("long").as("_fk"))
+        .groupBy("_fk").agg(count(lit(1)).as("n_rows"))
+        .join(broadcast(parentKeys), col("_fk") === col("_pk"), "left")
+        .select(col("_fk"), col("n_rows"),
+          when(col("_pk").isNull, col("n_rows")).otherwise(lit(0L))
+            .as("n_orphan_rows"))
+    }
     graft.operators.Pipeline.riFromKeyCounts("events.user_id -> customer",
-      spark.read.parquet(store)
+      store
         .groupBy("_fk")
         .agg(sum(col("n_rows")).as("n_rows"),
           sum(col("n_orphan_rows")).as("n_orphan_rows")))
@@ -2317,10 +1920,8 @@ object StreamOps {
     */
   def streamProfile(spark: SparkSession, sfDir: String,
                     exactDistincts: Boolean = false): DataFrame = {
-    val runId = UUID.randomUUID().toString.take(8)
-    val tmp = sys.props("java.io.tmpdir")
-    streamProfileAt(spark, sfDir,
-      s"$tmp/graft_stream_profile/$runId", exactDistincts)
+    streamProfileAt(spark, sfDir, graft.Scratch.dir("stream_profile"),
+      exactDistincts)
   }
 
   /** BOUNDED-PASS oracle form of the sketch-tier [[streamProfile]]
@@ -2361,11 +1962,8 @@ object StreamOps {
     val ck = s"$root0/ck"
     val li = graft.Tables.lineitem(spark, sfDir)
     val root = stageRanges(li, "l_orderkey", 3)
-    val q = readStream(spark).schema(li.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/src")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    eachBatch(stagedStream(spark, li.schema, s"$root/src"), ck) {
+      (batch, batchId) =>
         if (!batch.isEmpty) {
           // repartition spread (the profileTable/aggSuite device, r17):
           // each staged batch is ONE parquet file, so the 42-aggregate
@@ -2398,11 +1996,7 @@ object StreamOps {
             .write.mode("overwrite").parquet(s"$store/dvals/batch=$batchId")
           ()
         }
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     val moments = Pipeline.profileMergeMoments(
       spark.read.parquet(s"$store/moments"))
     // the drain selects its own columns first, which also drops the
@@ -2978,10 +2572,8 @@ object StreamOps {
                          linesRaw: DataFrame, nBatches: Int = 3,
                          bucketedStores: Option[Boolean] = None): DataFrame = {
     val bucketed = bucketedStores.getOrElse(defaultBucketedStores(spark))
-    import java.nio.file.{Files, Paths}
     val runId = UUID.randomUUID().toString.take(8)
-    val root = s"${sys.props("java.io.tmpdir")}/graft_stream_mvj/$runId"
-    Files.createDirectories(Paths.get(s"$root/src"))
+    val root = graft.Scratch.dir("stream_mvj")
     val orders = ordersRaw
       .select(lit("o").as("tag"), col("o_orderkey").as("okey"),
         lit(0).as("lnum"),
@@ -2998,18 +2590,8 @@ object StreamOps {
     def range(df: DataFrame, i: Int) =
       df.filter(col("okey") >= lo + i * span && col("okey") < lo + (i + 1) * span)
     (0 until nBatches).foreach { i =>
-      val stagedir = s"$root/stage$i"
-      range(orders, i).unionByName(range(lines, (i + 1) % nBatches))
-        .coalesce(1).write.parquet(stagedir)
-      val listing = Files.list(Paths.get(stagedir))
-      val part =
-        try listing.toArray.map(_.toString).find(_.endsWith(".parquet")).get
-        finally listing.close()
-      val target = Paths.get(s"$root/src/range$i.parquet")
-      Files.move(Paths.get(part), target)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stagedir))
-      Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      stageRange(range(orders, i).unionByName(range(lines, (i + 1) % nBatches)),
+        s"$root/src", i)
     }
     val envSchema = StructType(Seq(
       StructField("tag", StringType), StructField("okey", LongType),
@@ -3344,7 +2926,7 @@ object StreamOps {
                      splitDoc: Long = 100, nBatches: Int = 3,
                      nQueryDocs: Long = 10, k: Int = 5, nprobe: Int = 2,
                      trainIters: Int = 2): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     import graft.operators.Similarity
     val docs = graft.Tables.documents(spark, sfDir)
     val fresh = docs.filter(col("doc_id") < splitDoc).select("doc_id", "text")
@@ -3352,7 +2934,7 @@ object StreamOps {
     val indexDir = s"$root/index"
     val built = docIndexMemo.computeIfAbsent(
       s"$sfDir|$splitDoc|$trainIters", _ => {
-        val d = Files.createTempDirectory("graft_docfresh_idx").toString
+        val d = graft.Scratch.dir("docfresh_idx")
         Similarity.buildIvfPqIndex(
           Similarity.docVectors(docs.filter(col("doc_id") >= splitDoc)),
           d, trainIters)
@@ -3385,22 +2967,14 @@ object StreamOps {
     */
   def streamSessionize(spark: SparkSession, sfDir: String,
                        gapMinutes: Int): DataFrame = {
-    val table = s"graft_stream_sess_${UUID.randomUUID().toString.take(8)}"
     val gapUs = gapMinutes * 60L * 1000000L
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("w"),
                col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select(col("user_id"),
               unix_micros(col("w.start")).as("session_start_us"),
               (unix_micros(col("w.end")) - gapUs).as("session_end_us"),
@@ -3421,22 +2995,14 @@ object StreamOps {
     * (start of the silence that closed the session).
     */
   def streamSessionizeDynamic(spark: SparkSession, sfDir: String): DataFrame = {
-    val table = s"graft_stream_sessd_${UUID.randomUUID().toString.take(8)}"
     val gap = when(col("event_type") === "purchase", lit("60 minutes"))
       .otherwise(lit("30 minutes"))
-    val q = eventsStream(spark, sfDir)
+    toMemory(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .writeStream
-      .format("memory")
-      .queryName(table)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(table)
+           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select(col("user_id"),
               unix_micros(col("w.start")).as("session_start_us"),
               unix_micros(col("w.end")).as("session_end_us"),

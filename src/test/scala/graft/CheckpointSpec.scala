@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -14,10 +13,6 @@ import graft.streaming.StreamOps
   * those files exactly once.
   */
 class CheckpointSpec extends SparkSpec {
-
-  private def tempDir(name: String): String =
-    Files.createDirectories(Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_${name}_${UUID.randomUUID().toString.take(8)}")).toString
 
   private lazy val shardDir = GraftShards.stageShardDir(spark, sf0001)
 

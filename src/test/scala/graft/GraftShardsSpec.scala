@@ -15,13 +15,6 @@ import graft.streaming.StreamOps
   */
 class GraftShardsSpec extends SparkSpec {
 
-  private def tempDir(name: String): String = {
-    val d = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_${name}_${UUID.randomUUID().toString.take(8)}")
-    Files.createDirectories(d)
-    d.toString
-  }
-
   private lazy val shardDir = GraftShards.stageShardDir(spark, sf0001)
   private lazy val nEvents = Tables.events(spark, sf0001).count()
 

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.graft.*` read there fails this suite until it is either
   * removed or deliberately added to the list. Likewise every stream
   * builder gets its reader from `StreamOps.readStream`, which configures
-  * the session first, and every main gets its session from
-  * `Run.session`.
+  * the session first, every drain runs through StreamOps' one runner,
+  * every scratch path comes from [[Scratch]], and every main gets its
+  * session from `Run.session`.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -67,6 +68,27 @@ class KnobGuardSpec extends AnyFunSuite {
     // the one allowed is the helper's own body
     assert(found.size === 1 && found.head.contains("streaming/StreamOps.scala:"),
       "bare readStream (use StreamOps.readStream):\n" + found.mkString("\n"))
+  }
+
+  test("streams drain through StreamOps' one runner: streaming/ and " +
+       "sources/ hold a single awaitTermination") {
+    val found = lines("graft/streaming", "graft/sources")
+      .filter { case (_, line) => line.contains(".awaitTermination(") }
+      .map(_._1)
+    assert(found.size === 1 && found.head.contains("streaming/StreamOps.scala:"),
+      "drains outside StreamOps' runner:\n" + found.mkString("\n"))
+  }
+
+  test("src/main reads java.io.tmpdir only in Scratch and the two staging " +
+       "caches and the BUCKET_NAME fallback") {
+    val found = lines("graft", "org")
+      .filter { case (_, line) => line.contains("\"java.io.tmpdir\"") }
+      .map(_._1)
+    val files = found.map(at => at.substring(0, at.indexOf(".scala:")))
+    assert(files.sorted === Seq("Scratch", "sources/GraftShards",
+        "streaming/StreamConfig", "streaming/StreamOps")
+        .map(f => s"src/main/scala/graft/$f"),
+      "java.io.tmpdir reads (use Scratch.dir):\n" + found.mkString("\n"))
   }
 
   test("every main builds its session through Run.session, the one " +

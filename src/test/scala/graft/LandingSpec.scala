@@ -37,7 +37,7 @@ class LandingSpec extends SparkSpec {
     import java.sql.Timestamp
     val day1 = 1700000000000L - (1700000000000L % 86400000L)
     def ts(day: Int, hr: Int) = new Timestamp(day1 + day * 86400000L + hr * 3600000L)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_upsert/${java.util.UUID.randomUUID().toString.take(8)}"
+    val base = Scratch.dir("test_upsert")
     // two days, three events each
     val ev = Seq(
       (1L, 10L, "view", ts(0, 1), 1.0, 0), (2L, 11L, "view", ts(0, 2), 2.0, 0),
@@ -83,7 +83,7 @@ class LandingSpec extends SparkSpec {
     import java.sql.Timestamp
     val day1 = 1700000000000L - (1700000000000L % 86400000L)
     def ts(day: Int, hr: Int) = new Timestamp(day1 + day * 86400000L + hr * 3600000L)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_upsert_move/${java.util.UUID.randomUUID().toString.take(8)}"
+    val base = Scratch.dir("test_upsert_move")
     val ev = Seq(
       (1L, 10L, "view", ts(0, 1), 1.0, 0), (2L, 11L, "view", ts(0, 2), 2.0, 0),
       (3L, 12L, "click", ts(1, 3), 3.0, 0))
@@ -118,7 +118,7 @@ class LandingSpec extends SparkSpec {
     import java.sql.Timestamp
     val day1 = 1700000000000L - (1700000000000L % 86400000L)
     def ts(day: Int, hr: Int) = new Timestamp(day1 + day * 86400000L + hr * 3600000L)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_upsert_empty/${java.util.UUID.randomUUID().toString.take(8)}"
+    val base = Scratch.dir("test_upsert_empty")
     // day 0 holds ONLY event 1 — its correction empties that day, the
     // case dynamic partition overwrite cannot express (no rows to carry)
     val ev = Seq(
@@ -157,8 +157,7 @@ class LandingSpec extends SparkSpec {
     // directories must be dropped, buckets 1 and 3 must be untouched
     val ev = (1L to 40L).map(i => (i, i % 4, if (i % 2 == 0) "view" else "buy"))
       .toDF("event_id", "user_id", "event_type")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_test_forget_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val base = Scratch.dir("test_forget")
     try {
       val census = graft.operators.Landing
         .forgetUsersAt(ev, 2L, 4, base)
@@ -185,7 +184,7 @@ class LandingSpec extends SparkSpec {
   }
 
   test("landing twice yields identical partition counts (idempotence)") {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_test_land_idem"
+    val out = Scratch.dir("test_land_idem")
     val ev = Tables.events(spark, sf0001)
     val a = Landing.landPartitionedJson(ev, col("ts"), Seq("event_id"), out)
       .orderBy("y", "m", "d", "h").collect().toSeq

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.Trigger
 
 class LedgerSpec extends SparkSpec {
@@ -24,8 +23,18 @@ class LedgerSpec extends SparkSpec {
       ledger.storageAfter("t")
       assert(ledger.work("t").storageAfterBytes >= 0)
 
+      // AQE runs an aggregate's map stage as its own job, submitted from
+      // one of Spark's async threads; a slow grouping key makes it the
+      // longest job, named after the query's own action
+      val slowKey = udf { (k: Long) => Thread.sleep(100); k % 2 }
+      ledger("aqe") {
+        spark.range(0, 8, 1, 4).groupBy(slowKey(col("id"))).count().collect()
+      }
+      val site = ledger.work("aqe").longestJobSite
+      assert(site.contains("LedgerSpec") && !site.contains("CompletableFuture"), site)
+
       // a stateful drain: one durationMs split and state rows per drain
-      val dir = Files.createTempDirectory("ledger_spec")
+      val dir = Scratch.dir("ledger_spec")
       spark.range(100).selectExpr("id % 10 as k").write.parquet(s"$dir/in")
       ledger("t") {
         spark.readStream.schema("k long").parquet(s"$dir/in").dropDuplicates("k")

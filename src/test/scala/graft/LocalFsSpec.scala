@@ -2,7 +2,7 @@ package graft
 
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, LinkOption, Path}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
@@ -33,7 +33,8 @@ class LocalFsSpec extends AnyFunSuite {
   private def both[A](umask: String = "022")(f: (FileContext, Path) => A)
       : (A, A, Seq[String]) = {
     def run(fast: Boolean) = {
-      val dir = Files.createTempDirectory(s"graft_localfs_${if (fast) "fast" else "stock"}")
+      val dir = Files.createDirectories(
+        Paths.get(Scratch.dir(s"localfs_${if (fast) "fast" else "stock"}")))
       f(context(fast, umask), dir)
     }
     val stock = run(fast = false)
@@ -142,7 +143,7 @@ class LocalFsSpec extends AnyFunSuite {
   test("a sticky-bit permission takes the stock chmod path") {
     val fs = new LocalFs.RawFileSystem
     fs.initialize(FsConstants.LOCAL_FS_URI, new Configuration())
-    val dir = Files.createTempDirectory("graft_localfs_sticky")
+    val dir = Files.createDirectories(Paths.get(Scratch.dir("localfs_sticky")))
     def set(octal: String): Seq[String] = {
       val p = new HPath(dir.toString)
       val perm = new FsPermission(Integer.parseInt(octal, 8).toShort)

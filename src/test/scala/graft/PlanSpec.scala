@@ -448,7 +448,7 @@ class PlanSpec extends SparkSpec {
     // the point of the y/m/d/h layout at 100 TB: a time-sliced read must
     // list only the matching directories (PartitionFilters on the scan),
     // not scan the corpus
-    val out = s"${sys.props("java.io.tmpdir")}/graft_prune_${java.util.UUID.randomUUID().toString.take(8)}"
+    val out = Scratch.dir("prune")
     graft.operators.Landing.landPartitionedJson(
       Tables.events(spark, sf0001), col("ts"), Seq("event_id"), out).count()
     val landed = spark.read.schema(
@@ -856,7 +856,7 @@ class PlanSpec extends SparkSpec {
     // the in-memory catalog forgets tables across JVMs but their dirs stay
     Seq("graft_bucket_l", "graft_bucket_r").foreach { t =>
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_warehouse/$t"))
+        new java.io.File(s"${SparkSpec.warehouse}/$t"))
     }
     left.write.bucketBy(8, "k").sortBy("k").saveAsTable("graft_bucket_l")
     right.write.bucketBy(8, "k").sortBy("k").saveAsTable("graft_bucket_r")
@@ -915,8 +915,7 @@ class PlanSpec extends SparkSpec {
 
   test("nested schema pruning: selecting one struct field narrows the parquet ReadSchema") {
     val sp = spark
-    val root = s"${sys.props("java.io.tmpdir")}/graft_nested_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val root = Scratch.dir("nested")
     try {
       // events in the nested shape the landing JSON carries
       Tables.events(sp, sf0001)
@@ -940,7 +939,7 @@ class PlanSpec extends SparkSpec {
       sp.conf.set("spark.sql.cbo.enabled", "true")
       sp.sql("DROP TABLE IF EXISTS graft_stats_orders")
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_warehouse/graft_stats_orders"))
+        new java.io.File(s"${SparkSpec.warehouse}/graft_stats_orders"))
       Tables.orders(sp, sf0001).write.saveAsTable("graft_stats_orders")
       sp.sql("ANALYZE TABLE graft_stats_orders COMPUTE STATISTICS " +
         "FOR COLUMNS o_orderpriority")
@@ -968,8 +967,7 @@ class PlanSpec extends SparkSpec {
 
   test("dynamic partition pruning: a filtered dim prunes the partitioned fact scan at runtime") {
     val sp = spark
-    val root = s"${sys.props("java.io.tmpdir")}/graft_dpp_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val root = Scratch.dir("dpp")
     try {
       // the landing layout: fact partitioned by day on disk
       Tables.events(sp, sf0001)

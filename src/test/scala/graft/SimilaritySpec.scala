@@ -294,10 +294,8 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("embedding"))
     def serve(dir: String) =
       Similarity.searchIvfPqIndex(spark, dir, queries, 10).collect().toSeq
-    val dirA = s"${sys.props("java.io.tmpdir")}/graft_lc_spec_a_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val dirB = s"${sys.props("java.io.tmpdir")}/graft_lc_spec_b_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val dirA = Scratch.dir("lc_spec_a")
+    val dirB = Scratch.dir("lc_spec_b")
     try {
       // A: the full lifecycle — append everything, tombstone the slice,
       // compact the tombstones into a physical rewrite
@@ -335,8 +333,7 @@ class SimilaritySpec extends SparkSpec {
       transform(col("embedding"), x => x + lit(3.0f)).as("embedding"),
       col("label"))
     val all = clustered.unionByName(shifted)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_retrain_spec_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val dir = Scratch.dir("retrain_spec")
     try {
       Similarity.buildIvfPqIndex(clustered, dir)
       Similarity.appendToIvfPqIndex(shifted, dir, gen = 1L)
@@ -753,7 +750,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("incremental append freezes the codebooks and serves the appended vectors") {
     import org.apache.spark.sql.functions._
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_append_${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = Scratch.dir("append")
     val emb = Tables.embeddings(spark, sf0001)
     Similarity.buildIvfPqIndex(emb.filter(col("vec_id") >= 100), dir)
     def cb(): Seq[String] = spark.read.parquet(s"$dir/cb1")
@@ -810,7 +807,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("compaction physically drops tombstoned rows and clears the tombstone set") {
     import org.apache.spark.sql.functions._
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_delete_${java.util.UUID.randomUUID()}"
+    val dir = Scratch.dir("delete")
     val emb = Tables.embeddings(spark, sf0001)
     Similarity.buildIvfPqIndex(emb, dir)
     val total = spark.read.parquet(s"$dir/cells").count()
@@ -852,7 +849,7 @@ class SimilaritySpec extends SparkSpec {
       upto <- Gen.choose(0L, 4L)
     } yield (isDelete, ids, upto))
     val prop = Prop.forAll(opGen) { ops =>
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_tombprop_${java.util.UUID.randomUUID()}"
+      val dir = Scratch.dir("tombprop")
       Similarity.buildIvfPqIndex(base, dir, trainIters = 1)
       var written = (0L until 12L).map(i => (i, 0L)).toSet
       var tombs = Set.empty[(Long, Long)]

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import org.apache.spark.sql.functions._
 import graft.streaming.{StreamConfig, StreamOps}
 
@@ -51,8 +50,7 @@ class StreamConfigSpec extends SparkSpec {
   }
 
   test("BATCH_SIZE bounds each trigger: 3 files at BATCH_SIZE=1 land as 3 batches") {
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_mb_${UUID.randomUUID().toString.take(8)}")
+    val root = Paths.get(Scratch.dir("test_mb"))
     val src = root.resolve("src")
     Files.createDirectories(src)
     // 3 source files → with maxFilesPerTrigger=1, AvailableNow runs 3
@@ -95,8 +93,7 @@ class StreamConfigSpec extends SparkSpec {
   }
 
   test("SHARD_NUMBER parity mode lands exactly that shard's records") {
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_cfg_${UUID.randomUUID().toString.take(8)}")
+    val root = Paths.get(Scratch.dir("test_cfg"))
     Files.createDirectories(root)
     val cfg = StreamConfig.fromEnv(Map(
       "BUCKET_NAME" -> root.toString, "SHARD_NUMBER" -> "3"))
@@ -112,8 +109,7 @@ class StreamConfigSpec extends SparkSpec {
 
   test("the configured pipeline over the DSv2 source: SHARD_NUMBER " +
        "parity + BATCH_SIZE as the exact per-shard GetRecords limit") {
-    val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_cfg_${UUID.randomUUID().toString.take(8)}")
+    val root = Paths.get(Scratch.dir("test_cfg"))
     Files.createDirectories(root)
     // BATCH_SIZE=60: each shard holds ~125 of sf0.001's 1000 events
     // (8 shards), so the drain must page through >= 3 offset-logged

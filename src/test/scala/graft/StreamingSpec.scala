@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.StreamOps
@@ -11,13 +10,6 @@ import graft.streaming.StreamOps
   * asserted end-to-end against the landed files.
   */
 class StreamingSpec extends SparkSpec {
-
-  private def tempDir(name: String): String = {
-    val d = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_test_${name}_${UUID.randomUUID().toString.take(8)}")
-    Files.createDirectories(d)
-    d.toString
-  }
 
   private def landed(outDir: String) =
     spark.read.schema(StreamOps.landedDataSchema).json(outDir)
@@ -618,8 +610,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sketch-tier streaming profile: exact moments, bounded-error distincts, sketch-sized state") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_sketch_profile_test_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val root = Scratch.dir("sketch_profile_test")
     val got = StreamOps.streamProfileAt(spark, sf0001, root,
         exactDistincts = false)
       .collect().map(r => r.getAs[String]("col_name") -> r).toMap
@@ -722,8 +713,7 @@ class StreamingSpec extends SparkSpec {
     // replace-not-duplicate, proven on the store itself: two range
     // batches then a full re-delivery of every third id leave exactly
     // one code row per vector
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_binstore_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val dir = Scratch.dir("binstore")
     StreamOps.binaryUpsertBatch(emb.filter(col("vec_id") < 200), dir)
     StreamOps.binaryUpsertBatch(emb.filter(col("vec_id") >= 200), dir)
     StreamOps.binaryUpsertBatch(emb.filter(col("vec_id") % 3 === 0), dir)
