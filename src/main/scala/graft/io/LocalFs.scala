@@ -6,7 +6,7 @@ import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -25,6 +25,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `LocalFs`/`RawLocalFs` classes, so it reads false for [[ChecksummedFs]].
   * In Spark 4.1.2 its one reader is `ChecksumCheckpointFileManager`,
   * which only forwards it (checked with `javap -c` over the Spark jars).
+  *
+  * File writes (the landing JSON, `batch=N` stores, compaction) go
+  * through Hadoop's `FileSystem` API instead, where the same launches
+  * happen for every `_temporary`/attempt/partition dir, part file,
+  * `.crc` sidecar and `_SUCCESS`. [[writeOptions]] routes one write to
+  * [[ChecksummedFileSystem]]. This object is the only place in the
+  * engine that names a `file:` implementation.
   */
 object LocalFs {
 
@@ -35,6 +42,22 @@ object LocalFs {
     */
   def install(conf: Configuration): Unit =
     conf.set("fs.AbstractFileSystem.file.impl", classOf[ChecksummedFs].getName)
+
+  /** DataFrameWriter options that send one file write's `file:` lookups
+    * to [[ChecksummedFileSystem]]. Spark copies a write's options into
+    * the Hadoop conf it builds for that write, which both the driver-side
+    * committer and the executor tasks use, so nothing is set on the
+    * session. The route has to be write-scoped: Hadoop's `FileSystem`
+    * cache keys on scheme and user, not on conf, so once any `file:`
+    * lookup has run a later conf change is ignored, and which class the
+    * cache holds depends on the classpath (Hive's `ProxyLocalFileSystem`
+    * when `hive-exec` registers it, plain `LocalFileSystem` otherwise).
+    * Turning the cache off for these lookups makes each one build the
+    * class named here, whatever is cached.
+    */
+  val writeOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ChecksummedFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   private val Posix =
     FileSystems.getDefault.supportedFileAttributeViews.contains("posix")
@@ -67,6 +90,18 @@ object LocalFs {
       if (Files.isSymbolicLink(new File(f.toString).toPath)) super.getFileLinkStatus(f)
       else getFileStatus(f)
   }
+
+  /** `LocalFileSystem` over [[RawFileSystem]]: the same `.crc` sidecars
+    * through the `FileSystem` API.
+    *
+    * A landing write does not need the refuse-to-overwrite `rename` of
+    * Hive's `ProxyLocalFileSystem` (the cached `file:` class when
+    * `hive-exec` is on the classpath). `FileOutputCommitter` needs only
+    * `LocalFileSystem` semantics: its job commit deletes a file it is
+    * about to replace before renaming onto it. And a replayed batch is
+    * already idempotent, because `batch=N` is written with overwrite.
+    */
+  class ChecksummedFileSystem extends LocalFileSystem(new RawFileSystem)
 
   /** `RawLocalFs` over [[RawFileSystem]], with its four overrides. */
   private class RawFs(conf: Configuration) extends DelegateToFileSystem(

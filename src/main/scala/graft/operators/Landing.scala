@@ -51,13 +51,15 @@ object Landing {
     * holds a writer per open hour-bucket and the job emits tens of
     * thousands of tiny files at 100 TB. Returns the data-file schema
     * (partition cols live in directory names) so read-back never needs a
-    * schema-inference pass over just-written JSON.
+    * schema-inference pass over just-written JSON. The write's files go
+    * through [[graft.io.LocalFs.writeOptions]], so no dir, file or `.crc`
+    * sidecar costs a `chmod` process.
     */
   def writeLandedJson(bucketed: DataFrame, outDir: String,
                       mode: String = "overwrite"): StructType = {
     bucketed
       .repartition(col("y"), col("m"), col("d"))
-      .write.mode(mode)
+      .write.options(graft.io.LocalFs.writeOptions).mode(mode)
       .partitionBy("y", "m", "d", "h")
       .json(outDir)
     dataFileSchema(bucketed)
@@ -111,7 +113,7 @@ object Landing {
     val landed = spark.read.schema(dataSchema).json(landedDir)
     landed
       .repartition(col("y"), col("m"), col("d"))
-      .write.mode("overwrite")
+      .write.options(graft.io.LocalFs.writeOptions).mode("overwrite")
       .partitionBy("y", "m", "d")
       .parquet(compactDir)
     spark.read.parquet(compactDir)

@@ -49,7 +49,11 @@ object StreamOps {
     *
     * It also installs [[graft.io.LocalFs]] as `FileContext`'s `file:`
     * filesystem, which every checkpoint manager built afterwards uses for
-    * the offset log, commit log and state-store files.
+    * the offset log, commit log and state-store files. The sinks' file
+    * writes ([[landBatch]] and the `batch=N` stores) use Hadoop's
+    * `FileSystem` API, whose cached `file:` instance no session conf can
+    * replace once it exists; they reach the fork-free twin through the
+    * write's own options ([[graft.io.LocalFs.writeOptions]]).
     */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -118,7 +122,8 @@ object StreamOps {
     eachBatch(df, s"$root/ck") { (batch, batchId) =>
       if (!batch.isEmpty)
         perBatch(batch).coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/store/batch=$batchId")
+          .write.options(graft.io.LocalFs.writeOptions).mode("overwrite")
+          .parquet(s"$root/store/batch=$batchId")
     }
     df.sparkSession.read.parquet(s"$root/store")
   }
@@ -271,20 +276,20 @@ object StreamOps {
     * foreachBatch pattern that upgrades at-least-once to exactly-once.
     * A4: batchId is the monotone counter the reference keeps in
     * leaseCounter (consumer.py:189).
+    *
+    * The batch is written in one Spark job. The P4 empty-batch guard
+    * (consumer.py:236, no put for an empty batch) is folded into that
+    * write: a partitioned write of no rows creates no `y=` dir, only the
+    * committer's `_SUCCESS`, so a `batch=N` left without a partition dir
+    * is removed with one driver-side listing. No probe job runs first,
+    * and so the batch is not persisted either.
     */
   def landBatch(batch: DataFrame, outDir: String, batchId: Long): Unit = {
-    // P4 empty-batch guard (consumer.py:236); the batch is persisted so
-    // the guard's probe and the landing write share one computation of
-    // the deduped micro-batch instead of executing its plan twice
-    batch.persist()
-    try {
-      if (!batch.isEmpty) {
-        Landing.writeLandedJson(
-          Landing.bucketedWithLandId(batch, col("ts")),
-          s"$outDir/batch=$batchId")
-        ()
-      }
-    } finally batch.unpersist(blocking = false)
+    val dir = s"$outDir/batch=$batchId"
+    Landing.writeLandedJson(Landing.bucketedWithLandId(batch, col("ts")), dir)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(path).exists(_.isDirectory)) fs.delete(path, true): Unit
   }
 
   /** The reference's whole pipeline, streaming: dedup → idempotent

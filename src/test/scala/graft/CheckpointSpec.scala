@@ -1,16 +1,21 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import graft.io.LocalFs
 import graft.sources.GraftShards
 import graft.streaming.StreamOps
 
-/** The reference job's checkpoint I/O: every offset-log, commit-log and
-  * state-store file goes through [[graft.io.LocalFs]] without a process
-  * launch, and a drain that crashes after landing a batch resumes from
-  * those files exactly once.
+/** The reference job's checkpoint and landing I/O: every offset-log,
+  * commit-log and state-store file, and every landed dir and file, goes
+  * through [[graft.io.LocalFs]] without a process launch; each non-empty
+  * batch lands in one Spark job and an empty one lands nothing; and a
+  * drain that crashes after landing a batch resumes from those files
+  * exactly once.
   */
 class CheckpointSpec extends SparkSpec {
 
@@ -42,6 +47,67 @@ class CheckpointSpec extends SparkSpec {
     val hadoop = ProcessLaunches.chmodOrReadlink(launches)
     assert(hadoop.isEmpty, s"${hadoop.size} chmod/readlink launches, e.g. " +
       hadoop.take(3).mkString("; "))
+  }
+
+  /** Drains the staged stream in batches of `cap` per shard through
+    * `land`; returns the ids of the batches that read rows. */
+  private def landDrain(cap: Int, ck: String)(land: (DataFrame, Long) => Unit): Seq[Long] = {
+    val q = dedupedShards(cap).writeStream.foreachBatch(land)
+      .option("checkpointLocation", ck)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+  }
+
+  test("a shards → dedup → landBatch drain launches no chmod or readlink " +
+       "process") {
+    val cap = capFor(4)
+    val out = tempDir("launch_land_out")
+    val (batches, launches) = ProcessLaunches.during(
+      landDrain(cap, tempDir("launch_land_ck"))(StreamOps.landBatch(_, out, _)))
+    assert(batches.size === 4)
+    val hadoop = ProcessLaunches.chmodOrReadlink(launches)
+    assert(hadoop.isEmpty, s"${hadoop.size} chmod/readlink launches, e.g. " +
+      hadoop.take(3).mkString("; "))
+    assert(spark.read.schema(StreamOps.landedDataSchema).json(out).count() > 0)
+    // the route is the write's own: the session's cached `file:`
+    // filesystem is still a stock one, which launches chmod
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(!FileSystem.getLocal(conf).isInstanceOf[LocalFs.ChecksummedFileSystem])
+    assert(conf.get("fs.file.impl.disable.cache") === null)
+  }
+
+  test("a non-empty landBatch runs one Spark job; an empty batch of the " +
+       "deduped shape leaves no batch dir and no data file") {
+    val cap = capFor(2)
+    val out = tempDir("one_job_out")
+    val ledger = Ledger.attach(spark)
+    val (data, jobs) = try {
+      val calls = Seq.newBuilder[Long]
+      val data = landDrain(cap, tempDir("one_job_ck")) { (batch, id) =>
+        calls += id
+        ledger(s"landBatch-$id")(StreamOps.landBatch(batch, out, id))
+      }
+      (data, calls.result().map(id => id -> ledger.work(s"landBatch-$id").jobs))
+    } finally ledger.close()
+    assert(data.size === 2)
+    // a watermark-only batch, if the drain ran one, is empty and pays one
+    // write job too
+    assert(jobs.forall(_._2 == 1L), jobs)
+    def listing(dir: String): Seq[String] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally s.close()
+    }
+    assert(listing(out) === data.map(id => s"batch=$id").sorted)
+
+    // consumer.py:236: no put for an empty batch
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], dedupedShards(cap).schema)
+    val emptyOut = tempDir("empty_out")
+    StreamOps.landBatch(empty, emptyOut, 7L)
+    assert(listing(emptyOut).isEmpty)
   }
 
   test("restart after a crash behind a landed batch: every id lands, " +

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * removed or deliberately added to the list. Likewise every stream
   * builder gets its reader from `StreamOps.readStream`, which configures
   * the session first, every drain runs through StreamOps' one runner,
-  * every scratch path comes from [[Scratch]], and every main gets its
-  * session from `Run.session`.
+  * every scratch path comes from [[Scratch]], every main gets its
+  * session from `Run.session`, and only [[graft.io.LocalFs]] names a
+  * `file:` filesystem class.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
@@ -89,6 +91,20 @@ class KnobGuardSpec extends AnyFunSuite {
         "streaming/StreamConfig", "streaming/StreamOps")
         .map(f => s"src/main/scala/graft/$f"),
       "java.io.tmpdir reads (use Scratch.dir):\n" + found.mkString("\n"))
+  }
+
+  test("only graft/io/LocalFs names a file: filesystem implementation " +
+       "(fs.file.impl, fs.AbstractFileSystem.file.impl)") {
+    val keys = Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl")
+    val files = Files.walk(Paths.get("src/main"))
+    val found = try files.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      .filter { f => val text = new String(Files.readAllBytes(f), UTF_8)
+        keys.exists(text.contains) }
+      .map(_.toString)
+    finally files.close()
+    assert(found === Seq("src/main/scala/graft/io/LocalFs.scala"),
+      "file: filesystem named outside LocalFs (use LocalFs.install or " +
+      "LocalFs.writeOptions):\n" + found.mkString("\n"))
   }
 
   test("every main builds its session through Run.session, the one " +

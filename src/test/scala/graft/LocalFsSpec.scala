@@ -7,35 +7,70 @@ import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CommonConfigurationKeys, CreateFlag, FileAlreadyExistsException,
-  FileContext, FileStatus, FsConstants, Path => HPath}
+  FileContext, FileStatus, FileSystem, FsConstants, LocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.LocalFs
 
-/** [[graft.io.LocalFs]] against Hadoop's stock `LocalFs`: the same
-  * calls, each in its own temp dir, must leave the same files with the
-  * same modes and give the same answers — without a `chmod` or
-  * `readlink` launch.
+/** [[graft.io.LocalFs]] against Hadoop's stock local filesystems: its
+  * `FileContext` side against `LocalFs`, and its `FileSystem` twin
+  * (which the landing write reaches through `LocalFs.writeOptions`)
+  * against `LocalFileSystem`. The same calls, each in its own temp dir,
+  * must leave the same files with the same modes and give the same
+  * answers — without a `chmod` or `readlink` launch.
+  *
+  * The stock side of the twin is `LocalFileSystem`, not the Hive
+  * `ProxyLocalFileSystem` that this classpath caches for `file:`: that
+  * class only adds a `rename` that refuses to replace a file, and the
+  * landing write needs neither it nor its absence — `FileOutputCommitter`
+  * deletes a file before renaming onto it, and a replayed batch is
+  * idempotent because `batch=N` is written with overwrite.
   */
 class LocalFsSpec extends AnyFunSuite {
 
-  private def context(fast: Boolean, umask: String = "022"): FileContext = {
+  private def umasked(umask: String): Configuration = {
     val conf = new Configuration()
     conf.set(CommonConfigurationKeys.FS_PERMISSIONS_UMASK_KEY, umask)
+    conf
+  }
+
+  private def context(fast: Boolean, umask: String = "022"): FileContext = {
+    val conf = umasked(umask)
     if (fast) LocalFs.install(conf)
     FileContext.getFileContext(FsConstants.LOCAL_FS_URI, conf)
+  }
+
+  /** The fast side through the write route; the stock side built
+    * directly, since the `file:` cache may hold another class. */
+  private def fileSystem(fast: Boolean, umask: String = "022"): FileSystem = {
+    val conf = umasked(umask)
+    if (fast) {
+      LocalFs.writeOptions.foreach { case (k, v) => conf.set(k, v) }
+      FileSystem.get(FsConstants.LOCAL_FS_URI, conf)
+    } else {
+      val fs = new LocalFileSystem
+      fs.initialize(FsConstants.LOCAL_FS_URI, conf)
+      fs
+    }
   }
 
   /** Runs `f` once per filesystem in a fresh dir: (stock, fast) results,
     * and the fast side's chmod/readlink launches.
     */
   private def both[A](umask: String = "022")(f: (FileContext, Path) => A)
+      : (A, A, Seq[String]) = twins(context(_, umask))(f)
+
+  /** [[both]] over the `FileSystem` twin. */
+  private def bothFs[A](umask: String = "022")(f: (FileSystem, Path) => A)
+      : (A, A, Seq[String]) = twins(fileSystem(_, umask))(f)
+
+  private def twins[F, A](open: Boolean => F)(f: (F, Path) => A)
       : (A, A, Seq[String]) = {
     def run(fast: Boolean) = {
       val dir = Files.createDirectories(
         Paths.get(Scratch.dir(s"localfs_${if (fast) "fast" else "stock"}")))
-      f(context(fast, umask), dir)
+      f(open(fast), dir)
     }
     val stock = run(fast = false)
     val (fast, launches) = ProcessLaunches.during(run(fast = true))
@@ -64,6 +99,13 @@ class LocalFsSpec extends AnyFunSuite {
     assert(context(fast = true).getDefaultFileSystem.isInstanceOf[LocalFs.ChecksummedFs])
     assert(context(fast = false).getDefaultFileSystem
       .isInstanceOf[org.apache.hadoop.fs.local.LocalFs])
+    // the write options select the twin whatever `file:` class is cached,
+    // with a fresh instance per lookup
+    val cached = FileSystem.getLocal(new Configuration())
+    val (a, b) = (fileSystem(fast = true), fileSystem(fast = true))
+    assert(a.isInstanceOf[LocalFs.ChecksummedFileSystem] && (a ne b))
+    assert(!cached.isInstanceOf[LocalFs.ChecksummedFileSystem])
+    assert(FileSystem.getLocal(new Configuration()) eq cached)
   }
 
   test("files, created parents, dirs and .crc sidecars get the stock modes") {
@@ -81,6 +123,22 @@ class LocalFsSpec extends AnyFunSuite {
       assert(Set("a", "a/b", "a/b/.file.crc", "a/b/.private.crc", "c/e")
         .subsetOf(fast.keySet), s"umask $umask: $fast")
       assert(launches.isEmpty, s"umask $umask")
+
+      val (stockFs, fastFs, fsLaunches) = bothFs(umask) { (fs, dir) =>
+        val root = new HPath(dir.toString)
+        val out = fs.create(new HPath(root, "a/b/file"))
+        try out.write(1) finally out.close()
+        val priv = fs.create(new HPath(root, "a/b/private"),
+          new FsPermission("600"), true, 4096, 1.toShort, 1L << 20, null)
+        try priv.write(1) finally priv.close()
+        fs.mkdirs(new HPath(root, "c/d"))
+        fs.mkdirs(new HPath(root, "c/e"), new FsPermission("750"))
+        modes(dir)
+      }
+      assert(fastFs === stockFs, s"FileSystem, umask $umask")
+      assert(Set("a", "a/b", "a/b/.file.crc", "a/b/.private.crc", "c/d", "c/e")
+        .subsetOf(fastFs.keySet), s"FileSystem, umask $umask: $fastFs")
+      assert(fsLaunches.isEmpty, s"FileSystem, umask $umask")
     }
   }
 
@@ -141,19 +199,22 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a sticky-bit permission takes the stock chmod path") {
-    val fs = new LocalFs.RawFileSystem
-    fs.initialize(FsConstants.LOCAL_FS_URI, new Configuration())
-    val dir = Files.createDirectories(Paths.get(Scratch.dir("localfs_sticky")))
-    def set(octal: String): Seq[String] = {
-      val p = new HPath(dir.toString)
-      val perm = new FsPermission(Integer.parseInt(octal, 8).toShort)
-      ProcessLaunches.chmodOrReadlink(
-        ProcessLaunches.during(fs.setPermission(p, perm))._2)
-        .filter(_.contains(dir.toString))
+    val raw = new LocalFs.RawFileSystem
+    raw.initialize(FsConstants.LOCAL_FS_URI, new Configuration())
+    Seq[FileSystem](raw, fileSystem(fast = true)).foreach { fs =>
+      val dir = Files.createDirectories(Paths.get(Scratch.dir("localfs_sticky")))
+      def set(octal: String): Seq[String] = {
+        val p = new HPath(dir.toString)
+        val perm = new FsPermission(Integer.parseInt(octal, 8).toShort)
+        ProcessLaunches.chmodOrReadlink(
+          ProcessLaunches.during(fs.setPermission(p, perm))._2)
+          .filter(_.contains(dir.toString))
+      }
+      val name = fs.getClass.getSimpleName
+      assert(set("1750").size === 1, name)
+      assert(mode(dir) === Integer.parseInt("1750", 8), name)
+      assert(set("0700").isEmpty, name)
+      assert(mode(dir) === Integer.parseInt("0700", 8), name)
     }
-    assert(set("1750").size === 1)
-    assert(mode(dir) === Integer.parseInt("1750", 8))
-    assert(set("0700").isEmpty)
-    assert(mode(dir) === Integer.parseInt("0700", 8))
   }
 }
