@@ -3,8 +3,10 @@ package graft
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftbridge.ListenerBridge
@@ -16,11 +18,11 @@ import graft.Run.{d3, str}
 /** The per-query work ledger: what each measured run did, in counters
   * that do not move with the host's speed — jobs, stages and tasks;
   * input, shuffle and spill bytes; summed executor run time; driver
-  * planning time; block storage held after release; per stream drain,
-  * the mean `durationMs` split and state rows; the longest job and
-  * stage; and the [[WidthDecision]]s made. Counter names follow
-  * perfbench's, so Bench's `work` map and a traced perfbench run read
-  * side by side.
+  * planning time; janino compiles and their time; block storage held
+  * after release; per stream drain, the mean `durationMs` split and
+  * state rows; the longest job and stage; and the [[WidthDecision]]s
+  * made. Counter names follow perfbench's, so Bench's `work` map and a
+  * traced perfbench run read side by side.
   *
   * Jobs are tagged through the local property [[Ledger.TagKey]], which
   * Spark copies into each job's properties and into the threads the
@@ -133,9 +135,16 @@ final class Ledger private (spark: SparkSession) {
     val prev = sc.getLocalProperty(TagKey)
     current = tag
     sc.setLocalProperty(TagKey, tag)
+    val (compiles0, compileNs0) = codegen()
     try body
     finally {
       ListenerBridge.drain(sc)
+      val (compiles, compileNs) = codegen()
+      synchronized {
+        val w = entry(tag)
+        w.codegenCompiles = compiles - compiles0
+        w.codegenMs = (compileNs - compileNs0) / 1e6
+      }
       current = Untagged
       sc.setLocalProperty(TagKey, prev)
     }
@@ -162,6 +171,12 @@ object Ledger {
   val TagKey = "graft.ledger.tag"
   private val Untagged = "untagged"
 
+  /** Janino compiles so far and their summed time in ns. Both counts are
+    * JVM-wide, so in local mode they include the compiles inside tasks;
+    * a cache hit compiles nothing and counts nothing. */
+  private def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   /** Registers a new ledger's listeners on `spark`. */
   def attach(spark: SparkSession): Ledger = {
     val l = new Ledger(spark)
@@ -176,6 +191,8 @@ object Ledger {
     var jobs, stages, tasks, runMs = 0L
     var inputBytes, shuffleReadBytes, shuffleWriteBytes, spillBytes = 0L
     var planningMs = 0L
+    var codegenCompiles = 0L
+    var codegenMs = 0.0
     var storageAfterBytes = -1L
     var longestJobS = 0.0
     var longestJobSite = ""
@@ -199,6 +216,7 @@ object Ledger {
         s""""spark.input_bytes":$inputBytes,"spark.shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""spark.shuffle_write_bytes":$shuffleWriteBytes,"spark.spill_bytes":$spillBytes,""" +
         s""""spark.executor_run_ms":$runMs,"planning_ms":$planningMs,""" +
+        s""""codegen_compiles":$codegenCompiles,"codegen_ms":${d3(codegenMs)},""" +
         s""""storage_after_bytes":$storageAfterBytes,""" +
         s""""longest_job":{"site":${str(longestJobSite)},"s":${d3(longestJobS)}},""" +
         s""""longest_stage":{"s":${d3(longestStageS)},"tasks":$longestStageTasks},""" +

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -27,10 +29,11 @@ object Landing {
     * reproduce that naturally in directory names).
     */
   def withTimeBuckets(df: DataFrame, ts: Column): DataFrame =
-    df.withColumn("y", year(ts))
-      .withColumn("m", month(ts))
-      .withColumn("d", dayofmonth(ts))
-      .withColumn("h", hour(ts))
+    df.withColumns(timeBuckets(ts))
+
+  private def timeBuckets(ts: Column): ListMap[String, Column] =
+    ListMap("y" -> year(ts), "m" -> month(ts), "d" -> dayofmonth(ts),
+      "h" -> hour(ts))
 
   /** Record-level exact dedup on a key — the correct form of the
     * reference's batch-overlap check (consumer.py:292-303).
@@ -38,32 +41,47 @@ object Landing {
   def dedup(df: DataFrame, keys: Seq[String]): DataFrame =
     df.dropDuplicates(keys)
 
-  /** The landed row shape: time buckets + a uuid() land_id (reference
-    * consumer.py:244 names S3 objects with uuid4 — nondeterministic, so
-    * oracle-facing aggregates drop it).
+  /** The landed row shape: time buckets + a `land_id`, built in one
+    * projection. The reference names each S3 object with uuid4
+    * (consumer.py:244); here that naming lives in Spark's part-file names,
+    * and `land_id` is the md5 of `event_id`. It is stable across replays,
+    * so a replayed batch lands byte-identical rows, and it has no
+    * per-analysis seed (`uuid()` has one, inlined into the generated
+    * code), so the same plan compiles once, not once per batch.
     */
   def bucketedWithLandId(df: DataFrame, ts: Column): DataFrame =
-    withTimeBuckets(df, ts).withColumn("land_id", expr("uuid()"))
+    df.withColumns(timeBuckets(ts) +
+      ("land_id" -> md5(col("event_id").cast("string"))))
 
   /** THE landing write, shared by every landing path (batch, compaction
-    * input, streaming micro-batch): repartition on (y,m,d) so each output
-    * partition is written by a narrow set of tasks — without it every task
-    * holds a writer per open hour-bucket and the job emits tens of
-    * thousands of tiny files at 100 TB. Returns the data-file schema
+    * input, streaming micro-batch). Returns the data-file schema
     * (partition cols live in directory names) so read-back never needs a
     * schema-inference pass over just-written JSON. The write's files go
     * through [[graft.io.LocalFs.writeOptions]], so no dir, file or `.crc`
     * sidecar costs a `chmod` process.
+    *
+    * Each task sorts its rows by the partition columns and keeps one open
+    * writer, so it writes one file per (y,m,d,h) it holds. The write adds
+    * no exchange of its own: the two batch landings
+    * ([[landPartitionedJson]], [[landCompactCycle]]) repartition on
+    * (y,m,d) first, so a day is written by one task instead of one file
+    * per input partition and hour; a streaming micro-batch
+    * ([[graft.streaming.StreamOps.landBatch]]) is written by the dedup
+    * stage's own tasks, as Spark's `FileStreamSink` does, one file per
+    * (dedup partition, hour) and no extra stage per batch.
     */
   def writeLandedJson(bucketed: DataFrame, outDir: String,
                       mode: String = "overwrite"): StructType = {
     bucketed
-      .repartition(col("y"), col("m"), col("d"))
       .write.options(graft.io.LocalFs.writeOptions).mode(mode)
       .partitionBy("y", "m", "d", "h")
       .json(outDir)
     dataFileSchema(bucketed)
   }
+
+  /** One writer task per (y,m,d): the batch landings' input layout. */
+  private def byDay(df: DataFrame): DataFrame =
+    df.repartition(col("y"), col("m"), col("d"))
 
   /** Data-file schema of a landed frame: everything except the partition
     * columns, which live in directory names.
@@ -79,7 +97,7 @@ object Landing {
   def landPartitionedJson(df: DataFrame, ts: Column, key: Seq[String],
                           outDir: String): DataFrame = {
     val bucketed = bucketedWithLandId(dedup(df, key), ts)
-    val dataSchema = writeLandedJson(bucketed, outDir)
+    val dataSchema = writeLandedJson(byDay(bucketed), outDir)
     df.sparkSession.read.schema(dataSchema).json(outDir)
       .groupBy("y", "m", "d", "h")
       .agg(count(lit(1)).as("n_events"))
@@ -95,7 +113,7 @@ object Landing {
     val outDir = s"$root/in"
     val compactDir = s"$root/out"
     val dataSchema = writeLandedJson(
-      bucketedWithLandId(dedup(df, key), ts), outDir)
+      byDay(bucketedWithLandId(dedup(df, key), ts)), outDir)
     compactLanded(df.sparkSession, outDir, dataSchema, compactDir)
   }
 
@@ -111,8 +129,7 @@ object Landing {
                     landedDir: String, dataSchema: StructType,
                     compactDir: String): DataFrame = {
     val landed = spark.read.schema(dataSchema).json(landedDir)
-    landed
-      .repartition(col("y"), col("m"), col("d"))
+    byDay(landed)
       .write.options(graft.io.LocalFs.writeOptions).mode("overwrite")
       .partitionBy("y", "m", "d")
       .parquet(compactDir)

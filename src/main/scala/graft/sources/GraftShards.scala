@@ -125,6 +125,24 @@ object GraftShards {
     injectRemaining.remove(key); retryCounts.remove(key); ()
   }
 
+  /** A staged shard file, read through Hadoop's raw local filesystem.
+    * `DataSourceRDD` sets a task's input bytes from the Hadoop
+    * `FileSystem` read statistics of its thread and overwrites any count
+    * a reader sets itself, so a `java.nio` read would report 0 bytes.
+    * Opening and reading a file launches no process.
+    */
+  private[sources] def openShardFile(path: String): java.io.BufferedReader =
+    new java.io.BufferedReader(new java.io.InputStreamReader(
+      rawFs.open(new org.apache.hadoop.fs.Path(Paths.get(path).toUri)),
+      StandardCharsets.UTF_8))
+
+  private lazy val rawFs = {
+    val fs = new graft.io.LocalFs.RawFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration(false))
+    fs
+  }
+
   // ---- line-count cache (the GetRecords "MillisBehindLatest" analog) --
   private val lineCountCache = new ConcurrentHashMap[String, (Long, Long, Long)]()
 
@@ -547,8 +565,7 @@ private[sources] class GraftShardsReader(p: GraftShardsPartition)
   private def nextLine(): String = {
     while (fileIdx < p.files.length) {
       if (reader == null)
-        reader = Files.newBufferedReader(
-          Paths.get(p.files(fileIdx)._1), StandardCharsets.UTF_8)
+        reader = GraftShards.openShardFile(p.files(fileIdx)._1)
       val line = reader.readLine()
       if (line != null) return line
       reader.close(); reader = null; fileIdx += 1

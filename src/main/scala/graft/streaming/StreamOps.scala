@@ -283,6 +283,13 @@ object StreamOps {
     * committer's `_SUCCESS`, so a `batch=N` left without a partition dir
     * is removed with one driver-side listing. No probe job runs first,
     * and so the batch is not persisted either.
+    *
+    * The write adds no exchange ([[Landing.writeLandedJson]]): the dedup
+    * stage's tasks write the files, one per (dedup partition, hour), so a
+    * batch runs two stages, and [[Landing.compactLanded]] is the way to
+    * compact them. Its plan is the same from batch to batch (`land_id`
+    * is a function of `event_id`), so its generated code compiles once,
+    * not once per batch.
     */
   def landBatch(batch: DataFrame, outDir: String, batchId: Long): Unit = {
     val dir = s"$outDir/batch=$batchId"

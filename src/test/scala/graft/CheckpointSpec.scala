@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -95,6 +96,10 @@ class CheckpointSpec extends SparkSpec {
     // a watermark-only batch, if the drain ran one, is empty and pays one
     // write job too
     assert(jobs.forall(_._2 == 1L), jobs)
+    // the dedup stage's tasks write the files: source scan, then dedup +
+    // write, with no day exchange in between
+    val stages = data.map(id => id -> ledger.work(s"landBatch-$id").stages)
+    assert(stages.forall(_._2 == 2L), stages)
     def listing(dir: String): Seq[String] = {
       val s = Files.list(Paths.get(dir))
       try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
@@ -108,6 +113,32 @@ class CheckpointSpec extends SparkSpec {
     val emptyOut = tempDir("empty_out")
     StreamOps.landBatch(empty, emptyOut, 7L)
     assert(listing(emptyOut).isEmpty)
+  }
+
+  /** JVM-wide janino compiles so far; a code-cache hit compiles nothing. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Drains the staged stream in 4 batches through `write`; returns the
+    * compiles made per data batch after the first (from the end of one
+    * data batch's call to the end of the next's). */
+  private def compilesAfterFirst(write: (DataFrame, Long) => Unit): Seq[Long] = {
+    val cap = capFor(4)
+    val at = scala.collection.mutable.Map.empty[Long, Long]
+    val data = landDrain(cap, tempDir("codegen_ck")) { (batch, id) =>
+      write(batch, id)
+      at(id) = compiles
+    }
+    assert(data.size === 4)
+    data.sorted.sliding(2).map { case Seq(a, b) => at(b) - at(a) }.toSeq
+  }
+
+  test("a landBatch drain compiles no more code per batch than the same " +
+       "drain into noop") {
+    val noop = compilesAfterFirst((batch, _) =>
+      batch.write.format("noop").mode("overwrite").save())
+    val out = tempDir("codegen_out")
+    val land = compilesAfterFirst(StreamOps.landBatch(_, out, _))
+    assert(land.sum <= noop.sum, s"landBatch $land, noop $noop")
   }
 
   test("restart after a crash behind a landed batch: every id lands, " +
@@ -130,14 +161,16 @@ class CheckpointSpec extends SparkSpec {
       q.awaitTermination()
       seen.result()
     }
-    def landedIds(out: String): Seq[Long] =
+    /** The landed (event_id, land_id) pairs. */
+    def landedIds(out: String): Seq[(Long, String)] =
       spark.read.schema(StreamOps.landedDataSchema).json(out)
-        .select("event_id").collect().map(_.getLong(0)).toSeq
+        .select("event_id", "land_id").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
 
     val (whole, wholeCk) = (tempDir("whole_out"), tempDir("whole_ck"))
     assert(drain(whole, wholeCk, crash = false).size >= 5)
     val expected = landedIds(whole)
-    assert(expected.nonEmpty && expected.distinct.size === expected.size)
+    assert(expected.nonEmpty && expected.map(_._1).distinct.size === expected.size)
 
     val (out, ck) = (tempDir("crash_out"), tempDir("crash_ck"))
     intercept[StreamingQueryException](drain(out, ck, crash = true))
@@ -151,7 +184,9 @@ class CheckpointSpec extends SparkSpec {
     val resumed = drain(out, ck, crash = false)
     assert(resumed.headOption === Some(crashAfter))
     val got = landedIds(out)
-    assert(got.distinct.size === got.size, "an event_id landed twice")
+    assert(got.map(_._1).distinct.size === got.size, "an event_id landed twice")
+    // land_id is a function of event_id, so the replayed batch landed the
+    // same rows
     assert(got.sorted === expected.sorted)
   }
 }

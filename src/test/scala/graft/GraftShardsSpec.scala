@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.UUID
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import graft.sources.GraftShards
@@ -51,6 +52,24 @@ class GraftShardsSpec extends SparkSpec {
           .count()
       }
     }
+  }
+
+  test("a batch read reports the staged shard files' size as its input bytes") {
+    val files = {
+      val s = Files.walk(Paths.get(shardDir))
+      // data files only: not the `.crc` sidecars or the `_STAGED` marker
+      try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+        p.getParent.getFileName.toString.startsWith("shard=") &&
+        !p.getFileName.toString.startsWith(".")).toSeq
+      finally s.close()
+    }
+    assert(files.nonEmpty)
+    val ledger = Ledger.attach(spark)
+    try {
+      ledger("read")(spark.read.format("graft-shards").load(shardDir)
+        .write.format("noop").mode("overwrite").save())
+      assert(ledger.work("read").inputBytes === files.map(Files.size).sum)
+    } finally ledger.close()
   }
 
   test("BATCH_SIZE pages the drain: cap 100/shard → multiple batches, " +

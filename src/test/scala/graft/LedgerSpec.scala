@@ -33,6 +33,18 @@ class LedgerSpec extends SparkSpec {
       val site = ledger.work("aqe").longestJobSite
       assert(site.contains("LedgerSpec") && !site.contains("CompletableFuture"), site)
 
+      // the same plan, built and run twice: the second run's generated
+      // code is all cache hits (a fresh multiplier makes the first run
+      // compile its own)
+      val k = System.nanoTime() % 1000000 + 2
+      def plan = spark.range(0, 1000, 1, 2).selectExpr(s"id * $k as x")
+        .filter("x % 7 = 1").groupBy((col("x") % 3).as("g")).count()
+      ledger("cg1")(plan.collect())
+      ledger("cg2")(plan.collect())
+      assert(ledger.work("cg1").codegenCompiles > 0)
+      assert(ledger.work("cg2").codegenCompiles === 0L)
+      assert(ledger.work("cg2").toJson.contains("\"codegen_compiles\":0,"))
+
       // a stateful drain: one durationMs split and state rows per drain
       val dir = Scratch.dir("ledger_spec")
       spark.range(100).selectExpr("id % 10 as k").write.parquet(s"$dir/in")

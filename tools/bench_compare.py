@@ -5,9 +5,11 @@ than the given factor, and queries present on only one side.
 
 When both artifacts carry Bench's per-query "work" ledger, each wall-time
 mover is labelled with the counters that moved with it (jobs, tasks,
-shuffle bytes, spill bytes), or "counters unchanged: host noise" if none
-did, and queries whose counters moved beyond the factor are listed on
-their own. Artifacts without "work" compare on wall time only.
+shuffle bytes, spill bytes, janino compiles and their time), or "counters
+unchanged: host noise" if none did, and queries whose counters moved
+beyond the factor are listed on their own. A counter one artifact does
+not carry (the codegen pair predates some) is not compared. Artifacts
+without "work" compare on wall time only.
 
 Usage: bench_compare.py <old.json> <new.json> [factor=1.3]
 """
@@ -19,6 +21,8 @@ COUNTERS = {
     "tasks": lambda w: w["spark.tasks"],
     "shuffle_bytes": lambda w: w["spark.shuffle_read_bytes"] + w["spark.shuffle_write_bytes"],
     "spill_bytes": lambda w: w["spark.spill_bytes"],
+    "codegen_compiles": lambda w: w.get("codegen_compiles"),
+    "codegen_ms": lambda w: w.get("codegen_ms"),
 }
 
 
@@ -28,6 +32,8 @@ def counter_moves(old, new, factor):
     moves = []
     for name, f in COUNTERS.items():
         a, b = f(old), f(new)
+        if a is None or b is None:
+            continue
         if (a == 0) != (b == 0) or (a and b and max(a / b, b / a) > factor):
             moves.append((name, a, b))
     return moves
